@@ -47,6 +47,9 @@ from real_time_big_data_analytics_spark.registry import all_queries
 from real_time_big_data_analytics_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# Processes in the multi-core calibration: 8, but never more than the
+# host has cores, or a quiet small host reads as contended.
+_MC_WORKERS = min(8, os.cpu_count() or 1)
 
 HEADLINE = [
     "flagship_windowed_analytics",
@@ -251,9 +254,9 @@ def _ambient() -> dict:
         acc += i * i & 0xFFFF
     amb["calib_sec"] = round(time.monotonic() - t0, 4)
     amb["calib_check"] = acc & 0xFFFF  # pin the loop against DCE-style edits
-    # MULTI-CORE calibration (round 9): 8 processes running the same
-    # loop concurrently. Background multi-core load (other tenants'
-    # Spark jobs) inflates THIS reading while leaving the single-thread
+    # MULTI-CORE calibration (round 9): _MC_WORKERS processes running
+    # the same loop concurrently. Background multi-core load (other
+    # tenants' Spark jobs) inflates THIS reading while leaving the single-thread
     # one untouched — exactly the contention mode that inflated r8/r9
     # shuffle-heavy queries ~15% at normal single-thread speed, which
     # per-query normalization cannot correct (it senses the wrong
@@ -262,9 +265,9 @@ def _ambient() -> dict:
     try:
         import multiprocessing as mp
 
-        with mp.get_context("fork").Pool(8) as pool:
+        with mp.get_context("fork").Pool(_MC_WORKERS) as pool:
             t0 = time.monotonic()
-            pool.map(_mc_calib_worker, range(8))
+            pool.map(_mc_calib_worker, range(_MC_WORKERS))
             amb["calib_mc_sec"] = round(time.monotonic() - t0, 4)
     except Exception:
         amb["calib_mc_sec"] = None
@@ -302,18 +305,18 @@ def _mc_calib_quick_worker(_i: int) -> int:
 
 
 def _mc_calib_quick() -> float | None:
-    """Short MULTI-CORE calibration (round 10, VERDICT r9 ask #6): 8
-    forked processes running the quick loop concurrently. Co-tenant
-    MULTI-core load inflates this while leaving the single-thread
+    """Short MULTI-CORE calibration (round 10, VERDICT r9 ask #6):
+    _MC_WORKERS forked processes running the quick loop concurrently.
+    Co-tenant MULTI-core load inflates this while leaving the single-thread
     reading untouched — the contention mode r9 could only attribute
     post-hoc; interleaved per-bracket it becomes a requeue signal and
     a normalization axis. ~0.2-0.4 s nominal; None if fork fails."""
     try:
         import multiprocessing as mp
 
-        with mp.get_context("fork").Pool(8) as pool:
+        with mp.get_context("fork").Pool(_MC_WORKERS) as pool:
             t0 = time.monotonic()
-            pool.map(_mc_calib_quick_worker, range(8))
+            pool.map(_mc_calib_quick_worker, range(_MC_WORKERS))
             return time.monotonic() - t0
     except Exception:
         return None

@@ -27,6 +27,8 @@ rounded).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -75,11 +77,11 @@ def trade_pagerank(
     ``trade_label_propagation``). The lazily-composed 5-iteration
     Spark plan spent ~1.2 s scheduling ~15 KB-data stages per run;
     the replay is one collect + pure-Python recurrence. r11 left this
-    alone fearing float summation-order flips; measured: per-dst masses
-    accumulated in sorted (src, dst) edge order land on EXACTLY the
-    committed rounded ranks at all three SFs (frame-equal vs the old
-    plan; the 1e-6 output rounding is what absorbs order ulps — the
-    DuckDB CTE sums in its own order too). Final rounding uses the
+    alone fearing float summation-order flips. Each per-dst mass is a
+    ``math.fsum`` of its terms: the correctly rounded sum, so the driver
+    result does not depend on edge order and is at least as accurate as
+    any distributed order (the DuckDB CTE sums in its own order; the
+    1e-6 output rounding absorbs its ulps). Final rounding uses the
     MMR driver twin of round2's exact floor/ceil construction.
     NOTE plan captures: the operator is eager at construction (the
     ADVICE r11 eager-collect contract — plan_dump shows only the
@@ -106,8 +108,6 @@ def trade_pagerank(
     def _round_s(x: float, scale: int) -> float:
         # round2's exact construction (the MMR twin): compare the
         # EXACT fractional part against 0.5 — C/DuckDB semantics
-        import math
-
         p = x * float(10**scale)
         if p >= 0:
             fl = float(math.floor(p))
@@ -119,11 +119,11 @@ def trade_pagerank(
 
     ranks = {v: 1.0 / n_nodes for v in nodes}
     for _ in range(n_iter):
-        mass: dict[int, float] = {}
+        terms: dict[int, list[float]] = {}
         for s, d, p in rows:
-            mass[d] = mass.get(d, 0.0) + ranks[s] * p
+            terms.setdefault(d, []).append(ranks[s] * p)
         ranks = {
-            v: (1.0 - damping) / n_nodes + damping * mass.get(v, 0.0)
+            v: (1.0 - damping) / n_nodes + damping * math.fsum(terms.get(v, ()))
             for v in nodes
         }
     out = [(names[v], _round_s(ranks[v], 6)) for v in nodes]

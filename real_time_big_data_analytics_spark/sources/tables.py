@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -34,6 +35,43 @@ TABLE_NAMES = (
 # (region/nation are fixed-cardinality; supplier/part/customer grow but
 # stay << fact tables). Used by operators to hint broadcast joins.
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
+
+# Session confs that change what parquet schema inference returns for
+# the same file; part of the schema cache key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet table at ``path``, inferred once per file.
+
+    Inference is a Spark job (the parallel footer merge); for a single
+    file its result only changes when the file or an inference conf
+    does. The cache key is the file's identity (absolute path, inode,
+    mtime_ns, size) plus the session's current values of
+    ``_INFERENCE_CONFS``, so a rewritten or replaced file, or a flipped
+    conf, is inferred again. A directory (a part-file table) or a
+    path that is not a local file is inferred on every call.
+    """
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema
+    st = os.stat(path)
+    key = (
+        os.path.abspath(path),
+        st.st_ino,
+        st.st_mtime_ns,
+        st.st_size,
+        *(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:  # concurrent misses only infer the same schema twice
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
 
 
 def normalize_timestamps(df: DataFrame) -> DataFrame:
@@ -78,7 +116,14 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan of one harness table (SURVEY.md §2.1 S10).
+    """Read one harness table (SURVEY.md §2.1 S10).
+
+    The read uses the schema from :func:`parquet_schema`, which
+    infers it once per file and caches it by file identity (path,
+    inode, mtime_ns, size) and the parquet inference confs; so only
+    the first load of a file pays the inference job. Each call returns
+    a new DataFrame with its own attribute ids, so self-joins of two
+    loads stay unambiguous.
 
     Timestamp columns are normalized to session-zone TIMESTAMP
     regardless of the file's physical encoding — see
@@ -87,7 +132,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return normalize_timestamps(df)
 
 

@@ -63,7 +63,8 @@ def _stream_shuffle_partitions(spark: SparkSession):
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded view of the events table via file-stream replay.
 
-    Schema comes from the batch footer (no inference on streams); all
+    Schema comes from the batch footer via the per-file cache of
+    sources.tables.parquet_schema (no inference on streams); all
     timestamp encodings (nanos-long / NTZ / LTZ) are normalized by the
     shared sources.tables.normalize_timestamps helper — watermarks
     reject TIMESTAMP_NTZ, so the cast must happen here, before any
@@ -79,11 +80,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (t13's dedup ledger) actually evicts — the production
     micro-batch cadence, observable in recentProgress.
     """
-    from ..sources.tables import normalize_timestamps
+    from ..sources.tables import normalize_timestamps, parquet_schema
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     # FileStreamSource requires a directory; stage the (read-only)
     # table file(s) into a temp dir via symlink — zero-copy replay.
     stage = _session_tmpdir("rtba_stream_src_")

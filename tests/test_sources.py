@@ -377,3 +377,63 @@ def test_kafka_wire_stream_offsets_advance_per_partition(spark, sf_dir):
         for r in read_events_via_kafka_wire(spark, sf_dir).collect()
     }
     assert drained == batch and len(drained) > 0
+
+
+def _job_ids(spark, group, action):
+    """Spark jobs that ``action()`` submits, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_schema_once_per_file(spark, sf_dir, tmp_path):
+    """Only the first load of a file runs the schema-inference job; a
+    second load of the unchanged file submits no Spark job at all."""
+    import shutil
+    import uuid
+
+    from real_time_big_data_analytics_spark.sources.tables import load_table
+
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path)
+    tag = uuid.uuid4().hex[:8]
+    first = _job_ids(spark, f"first_{tag}", lambda: load_table(spark, str(tmp_path), "events"))
+    assert len(first) == 1  # the counter sees the inference job
+    second = _job_ids(spark, f"second_{tag}", lambda: load_table(spark, str(tmp_path), "events"))
+    assert second == []
+
+
+def test_load_table_self_join_resolves(spark, sf_dir):
+    """Two loads of one table are separate DataFrames with their own
+    attribute ids, so a self-join condition stays unambiguous."""
+    from pyspark.sql import functions as F
+
+    from real_time_big_data_analytics_spark.sources.tables import load_table
+
+    a = load_table(spark, sf_dir, "events")
+    b = load_table(spark, sf_dir, "events")
+    joined = a.join(b, a["user_id"] == b["user_id"])
+    per_user = a.groupBy("user_id").count()
+    expected = per_user.select(F.sum(F.col("count") * F.col("count"))).first()[0]
+    assert joined.count() == expected
+
+
+def test_parquet_schema_reinfers_directories(spark, tmp_path):
+    """A part-file directory has no single file identity to key on: its
+    schema is inferred on every call, so replaced parts are picked up."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from real_time_big_data_analytics_spark.sources.tables import parquet_schema
+
+    d = tmp_path / "parts"
+    d.mkdir()
+    pq.write_table(pa.table({"a": pa.array([1], pa.int64())}), d / "part-0.parquet")
+    assert parquet_schema(spark, str(d)).simpleString() == "struct<a:bigint>"
+    (d / "part-0.parquet").unlink()
+    pq.write_table(pa.table({"b": pa.array(["x"], pa.string())}), d / "part-1.parquet")
+    assert parquet_schema(spark, str(d)).simpleString() == "struct<b:string>"

@@ -148,3 +148,40 @@ def test_load_table_normalizes_date_encoded_columns(spark, tmp_path):
     assert got == [datetime.datetime(1996, 1, 1), datetime.datetime(1996, 7, 4)]
     # date-range predicates still behave (and push down) on the cast
     assert df.filter("o_orderdate >= '1996-06-01'").count() == 1
+
+
+def test_load_table_picks_up_rewritten_ts_encoding(spark, tmp_path):
+    """The schema cache is keyed by file identity: rewriting
+    events.parquet in place with another ts encoding (int64 nanos →
+    timestamp[us]) is inferred again and still loads as TIMESTAMP."""
+    from real_time_big_data_analytics_spark.sources.tables import (
+        load_table,
+        parquet_schema,
+    )
+
+    sf_dir = _write_fixture(tmp_path, "nanos")
+    path = os.path.join(sf_dir, "events.parquet")
+    for encoding, raw in (("nanos", "bigint"), ("ntz", "timestamp_ntz")):
+        if encoding == "ntz":
+            shutil.copy(os.path.join(_write_fixture(tmp_path, "ntz"), "events.parquet"), path)
+        df = load_table(spark, sf_dir, "events")
+        assert dict(df.dtypes)["ts"] == "timestamp", encoding
+        assert sorted(r["ts"] for r in df.select("ts").collect()) == EXPECTED, encoding
+        assert parquet_schema(spark, path)["ts"].dataType.simpleString() == raw
+
+
+def test_parquet_schema_reinfers_when_an_inference_conf_changes(spark, tmp_path):
+    """The session's parquet inference confs are part of the cache key."""
+    from real_time_big_data_analytics_spark.sources.tables import parquet_schema
+
+    path = os.path.join(_write_fixture(tmp_path, "ntz"), "events.parquet")
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    try:
+        kinds = []
+        for value in ("true", "false", "true"):
+            spark.conf.set(key, value)
+            kinds.append(parquet_schema(spark, path)["ts"].dataType.simpleString())
+    finally:
+        spark.conf.set(key, prev)
+    assert kinds == ["timestamp_ntz", "timestamp", "timestamp_ntz"]
