@@ -77,7 +77,7 @@ def tws_runtime_available() -> bool:
       round 10: the python workers receive executorEnv even in local
       mode). A shim activated any other way after JVM start is
       importable here but NOT in the workers (late env mutation and
-      addPyFile both probed → crash, NOTES_r09 §6) — refuse rather
+      addPyFile both probed → worker crash) — refuse rather
       than register a query that dies executor-side."""
     try:
         import google.protobuf as gp

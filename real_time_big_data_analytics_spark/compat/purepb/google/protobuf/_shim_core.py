@@ -7,7 +7,7 @@ client serializes its state-server requests with
 ``pyspark/sql/streaming/proto/StateMessage_pb2.py``, whose only
 dependency is ``google.protobuf`` — absent from this container
 (probed in tests/test_streaming.py; installs are not permitted). The
-import-graph audit (NOTES_r09.md) shows the full surface that pb2 and
+import graph of pyspark's TWS path shows the full surface that pb2 and
 its consumers (stateful_processor_api_client, value/list/map state
 clients, transform_with_state_driver_worker) actually use:
 

@@ -3355,12 +3355,13 @@ def copurchase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = pairs.groupBy("pa", "pb").agg(F.count("*").alias("c_ab"))
     # Optimization r11 (guide §2.4/§1.2#1): the symmetric direction
     # used to be a unionAll of the SAME cnt subtree, and the per-part
-    # counts joined onto the union — post-AQE evidence (plans/r11)
-    # showed ZERO exchange reuse, so the basket self-join + pair count
-    # ran twice and lineitem scanned 12× per query. Both n_a and n_b
-    # now attach at pair grain (each cnt row carries both parts) and
-    # the flip is ONE explode over the joined rows — the pair subtree
-    # and its two count joins evaluate exactly once.
+    # counts joined onto the union — the post-AQE plan
+    # (tools/plan_dump.py) showed ZERO exchange reuse, so the basket
+    # self-join + pair count ran twice and lineitem scanned 12× per
+    # query. Both n_a and n_b now attach at pair grain (each cnt row
+    # carries both parts) and the flip is ONE explode over the joined
+    # rows — the pair subtree and its two count joins evaluate exactly
+    # once.
     both = cnt.join(
         n.select(F.col("p").alias("pa"), F.col("n_ord").alias("na")), "pa"
     ).join(n.select(F.col("p").alias("pb"), F.col("n_ord").alias("nb")), "pb")

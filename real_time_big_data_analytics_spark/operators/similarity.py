@@ -25,10 +25,46 @@ from ..sources.tables import load_table, spread
 # (the declared build-once/search-many lifecycle), and a warm /tmp can
 # no longer exclude the build cost from a fresh run's first sample.
 # A uuid, not the pid: pids recycle and a recycled pid plus a stale
-# /tmp dir would alias.
+# /tmp dir would alias. Since no later process can reuse such a dir,
+# each one is removed when the process that staged it exits.
 import uuid as _uuid
 
 _PROC_STAGE_TOKEN = _uuid.uuid4().hex[:12]
+_STAGED_DIRS: set[str] = set()
+
+
+def _proc_stage_dir(kind: str, sf_dir: str) -> tuple[str, str]:
+    """(tag, dir) for this process's ``kind`` index over ``sf_dir``'s
+    embeddings: the tag hashes the source file's fingerprint and the
+    process token, and the dir (with any ``.staging-*`` sibling) is
+    removed at interpreter exit."""
+    import hashlib
+    import os
+    import tempfile
+
+    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    tag = hashlib.md5(
+        f"{kind}|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
+    ).hexdigest()[:12]
+    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_{kind}_{tag}")
+    _remove_at_exit(index_dir)
+    return tag, index_dir
+
+
+def _remove_at_exit(path: str) -> None:
+    import atexit
+
+    if path not in _STAGED_DIRS:
+        _STAGED_DIRS.add(path)
+        atexit.register(_remove_staged, path)
+
+
+def _remove_staged(path: str) -> None:
+    import glob
+    import shutil
+
+    for p in (path, *glob.glob(glob.escape(path) + ".staging-*")):
+        shutil.rmtree(p, ignore_errors=True)
 
 N_QUERIES = 5  # vec_id < 5 are the demo query vectors
 TOP_K = 10
@@ -258,7 +294,6 @@ def knn_ivf_indexed(
     touching all of them.
     """
     import os
-    import tempfile
 
     import numpy as np
 
@@ -269,15 +304,7 @@ def knn_ivf_indexed(
         # an index built from the previous round's vectors would
         # silently serve stale cells. A real deployment versions its
         # index builds the same way.
-        src = os.path.join(sf_dir, "embeddings.parquet")
-        st = os.stat(src)
-        tag = (
-            f"{os.path.basename(os.path.normpath(sf_dir))}"
-            f"_{st.st_mtime_ns}_{st.st_size}_{_PROC_STAGE_TOKEN}"
-        )
-        index_dir = os.path.join(
-            tempfile.gettempdir(), "rtba_ivf_index", f"{tag}_c{n_cells}"
-        )
+        _tag, index_dir = _proc_stage_dir(f"ivf_c{n_cells}", sf_dir)
     if not os.path.isdir(os.path.join(index_dir, "vectors")):
         ivf_index_write(spark, sf_dir, index_dir, n_cells=n_cells)
 
@@ -828,6 +855,7 @@ def ivf_index_append_audit(
     import tempfile
 
     index_dir = tempfile.mkdtemp(prefix="rtba_ivf_append_")
+    _remove_at_exit(index_dir)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     corpus = emb.withColumn(
         "cell", F.expr(_sign_cell_expr(bits=APPEND_BITS))
@@ -2157,19 +2185,13 @@ def hnsw_index_write(spark: SparkSession, sf_dir: str) -> str:
     exactly (node_id, layer, neighbor_id) rows. Staged once per process per corpus
     fingerprint (the _PROC_STAGE_TOKEN discipline) via build-in-scratch + atomic rename (the delta-stager
     crash-idempotency discipline)."""
-    import hashlib
     import os
     import shutil
-    import tempfile
     import uuid
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"hnsw|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
-    ).hexdigest()[:12]
+    tag, index_dir = _proc_stage_dir("hnswidx", sf_dir)
     if tag in _HNSW_INDEX_DIRS:
         return _HNSW_INDEX_DIRS[tag]
-    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_hnswidx_{tag}")
     done = os.path.join(index_dir, "_staging_complete")
     if not os.path.exists(done):
         if os.path.exists(index_dir):
@@ -2590,19 +2612,13 @@ def hnsw_append_stage(spark: SparkSession, sf_dir: str) -> str:
     corpus's per-shard edges, then read them BACK from disk and run
     the insert cogroup for the nightly batch, persisting the updated
     graph as ``edges_v2`` — the full persisted-index round trip."""
-    import hashlib
     import os
     import shutil
-    import tempfile
     import uuid
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"hnswappend|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
-    ).hexdigest()[:12]
+    tag, index_dir = _proc_stage_dir("hnswapp", sf_dir)
     if tag in _HNSW_APPEND_DIRS:
         return _HNSW_APPEND_DIRS[tag]
-    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_hnswapp_{tag}")
     done = os.path.join(index_dir, "_staging_complete")
     if not os.path.exists(done):
         if os.path.exists(index_dir):
@@ -2960,20 +2976,14 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
       ``edges_compacted``; a below-threshold shard would keep its
       base edges (the per-shard decision is written to
       ``compaction.json``)."""
-    import hashlib
     import json as _json
     import os
     import shutil
-    import tempfile
     import uuid
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"hnswdel|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
-    ).hexdigest()[:12]
+    tag, index_dir = _proc_stage_dir("hnswdel", sf_dir)
     if tag in _HNSW_DELETE_DIRS:
         return _HNSW_DELETE_DIRS[tag]
-    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_hnswdel_{tag}")
     done = os.path.join(index_dir, "_staging_complete")
     if not os.path.exists(done):
         if os.path.exists(index_dir):

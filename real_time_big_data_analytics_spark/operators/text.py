@@ -383,18 +383,21 @@ def ngram_jaccard_pairs(
     sh = with_arr.select(
         "doc_id", F.size("sh_arr").alias("sz"), F.explode_outer("sh_arr").alias("shingle")
     ).filter(F.col("shingle").isNotNull())
-    # Optimization r12 (guide §2.3 shuffle fewer bytes): J(A,B) >= t
-    # requires |A∩B| >= t·max(|A|,|B|) and |∩| <= min, so q·min >=
-    # p·max is a LOSSLESS size prefilter (J_max = min/max < t prunes
-    # the pair no matter how many shingles it shares). Applied INSIDE
-    # the pair-generation lambda, so a pruned pair is never built,
-    # exploded, or shuffled to the pair-grain aggregation — at sf0.1
-    # that is 1.27M -> 469k candidate rows with the output edge set
-    # verified row-identical. Exact rational arithmetic (p/q bigints),
-    # the ppjoin_jaccard_pairs discipline: a float threshold constant
-    # could prune a pair sitting exactly at J = t.
+    # Optimization r12 (guide §2.3 shuffle fewer bytes): |A∩B| <=
+    # min(|A|,|B|), so J(A,B) <= min/max — a size prefilter. The pair
+    # is EMITTED on round2(J, 4) >= t, though, and J = 0.799975 rounds
+    # to 0.8: pruning on min/max < t would lose it. So the prune bound
+    # is one rounding step lower, min/max < t − 10⁻⁴, which is lossless
+    # for the rounded predicate (a full step, not the half step, leaves
+    # margin for the double product J·10⁴ that round2 rounds). Applied
+    # INSIDE the pair-generation lambda, so a pruned pair is never
+    # built, exploded, or shuffled to the pair-grain aggregation (at
+    # sf0.1 the exact-t bound cut 1.27M candidate rows to 469k). Exact
+    # rational arithmetic in bigints (kq·min >= kp·max with kp/kq =
+    # t − 10⁻⁴), the ppjoin_jaccard_pairs discipline: a float threshold
+    # constant could prune a pair sitting exactly at the bound.
     frac = Fraction(threshold).limit_denominator(10**6)
-    tp, tq = frac.numerator, frac.denominator
+    kp, kq = frac.numerator * 10**4 - frac.denominator, frac.denominator * 10**4
     # array_sort on struct<doc_id,sz> orders by doc_id (first field),
     # so i<j expansion below guarantees a_id < b_id with no extra
     # comparison; slice() start is 1-based → i+2 skips self and priors.
@@ -407,7 +410,7 @@ def ngram_jaccard_pairs(
                 F.expr(
                     "flatten(transform(ds, (x, i) -> "
                     "transform(filter(slice(ds, i + 2, size(ds)), y -> "
-                    f"{tq} * least(x.sz, y.sz) >= {tp} * greatest(x.sz, y.sz)), "
+                    f"{kq}L * least(x.sz, y.sz) >= {kp}L * greatest(x.sz, y.sz)), "
                     "y -> struct(x.doc_id as a_id, x.sz as sz_a, "
                     "y.doc_id as b_id, y.sz as sz_b))))"
                 )

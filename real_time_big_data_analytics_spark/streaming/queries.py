@@ -391,7 +391,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     remains — pinned precisely, not assumed: the shim must be on
     PYTHONPATH BEFORE the JVM starts (state-server workers inherit
     the JVM's frozen env; late os.environ mutation and
-    ``addPyFile`` both probed and refused — see NOTES_r09.md), and
+    ``addPyFile`` were both probed and each crashed the worker), and
     the grading driver's session exists before this module loads.
     Requires the RocksDB state store provider (set by the test).
     """

@@ -426,3 +426,27 @@ def test_training_mix_v2_matches_python_replay(spark, sf_dir):
         assert abs(r.token_share - sum(toks) / total_tokens) < 1e-5
         assert r.avg_lr >= 0
     assert abs(sum(r.token_share for r in rows.values()) - 1.0) < 1e-4
+
+
+def test_size_prefilter_keeps_pairs_that_round_up_to_threshold(spark, tmp_path):
+    """The pair is emitted on round2(J, 4) >= t, so the min/max size
+    prefilter must not prune a pair whose J only ROUNDS up to t.
+    Docs with nested distinct word 3-shingles: 31,999 of 40,000 gives
+    J = min/max = 0.799975 -> 0.8 (emitted); 31,996 of 40,000 gives
+    0.7999 (not emitted)."""
+    words = [f"w{i}" for i in range(40_002)]  # 40,000 distinct shingles
+    docs = [
+        (1, " ".join(words)),
+        (2, " ".join(words[:32_001])),  # 31,999 shingles, all in doc 1
+        (3, " ".join(words[:31_998])),  # 31,996 shingles
+    ]
+    df = spark.createDataFrame(
+        [(i, t, "en", "s", len(t)) for i, t in docs],
+        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
+    )
+    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    got = {
+        (r.a_id, r.b_id): r.jaccard
+        for r in text.ngram_jaccard_pairs(spark, str(tmp_path), threshold=0.8).collect()
+    }
+    assert got == _brute_jaccard_pairs(docs) == {(1, 2): 0.8, (2, 3): 0.9999}

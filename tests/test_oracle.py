@@ -29,7 +29,7 @@ def test_matches_oracle(spark, sf_dir, duck, name):
 
 
 def test_uncast_integer_sum_fails_gate():
-    """CORRECTNESS_r04 regression: an oracle twin whose bare ``sum(int)``
+    """Round-4 regression (q12): an oracle twin whose bare ``sum(int)``
     comes back from DuckDB as HUGEINT→float64 must FAIL the local gate
     even when values are numerically identical, because the driver's
     value hash distinguishes int64 ``2`` from float64 ``2.0``."""

@@ -272,7 +272,7 @@ def test_tws_timers_live(spark, sf_dir):
     round, 182 consecutive successful batches with NO timer calls, so
     it is the trigger semantics, not a protocol failure — hence the
     query is stopped once the first batch lands instead of awaiting a
-    termination that never comes (NOTES_r09.md)."""
+    termination that never comes."""
     import time
     import uuid
 
@@ -455,9 +455,8 @@ def test_tws_availability_insensitive_to_jvm_timing(spark):
     WHEN all_queries() first runs relative to the first SparkSession.
     The shim activated pre-JVM (conftest), so with a LIVE JVM in this
     process the availability gate still answers True — previously it
-    flipped False post-JVM and a (test_delta_log, test_receipts)
-    pytest subset rendered a different RECEIPTS surface than the full
-    suite."""
+    flipped False post-JVM and a pytest subset saw a different
+    registry than the full suite."""
     assert spark.sparkContext is not None  # a JVM is definitely live
     from real_time_big_data_analytics_spark.compat import (
         tws_runtime_available,

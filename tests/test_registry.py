@@ -45,37 +45,6 @@ def test_entry_contract(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_unverified_queries_lead_the_registry_order():
-    """The harness checks a bounded prefix of queries(); names without
-    a conclusive driver-receipt row (CORRECTNESS_r*.json) must sort
-    ahead of already-verified ones so coverage rotates across rounds."""
-    from real_time_big_data_analytics_spark.registry import _driver_receipts
-
-    verified, red = _driver_receipts()
-    names = list(QUERIES)
-    if not verified or len(verified) == len(names):
-        pytest.skip("rotation only observable with a partial receipt")
-    first_verified = min(i for i, n in enumerate(names) if n in verified)
-    last_unverified = max(i for i, n in enumerate(names) if n not in verified)
-    assert last_unverified < first_verified, (
-        f"unverified query at position {last_unverified} sorts after "
-        f"verified one at {first_verified}"
-    )
-    # driver-red names (ran and failed, never green since) outrank the
-    # whole never-verified tier — a wrong answer the grader has seen is
-    # re-receipted before new coverage
-    if red:
-        last_red = max(i for i, n in enumerate(names) if n in red)
-        first_nonred_unverified = min(
-            (i for i, n in enumerate(names) if n not in verified and n not in red),
-            default=len(names),
-        )
-        assert last_red < first_nonred_unverified, (
-            f"driver-red query at position {last_red} sorts after "
-            f"never-verified one at {first_nonred_unverified}"
-        )
-
-
 REPEATABLE = (
     # queries with session-external artifacts (staged exports, persisted
     # index, memory sinks, checkpointed iteration) — a stale-cache or
@@ -115,55 +84,19 @@ def test_entry_shim_pins_utc_session_tz(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def test_round5_additions_sort_after_prefreeze_tail():
-    """Registry-freeze discipline (VERDICT r4 ask #3): names registered
-    after the freeze (DRIVER_CHECK_DEFER) must sort behind every
-    pre-freeze never-verified name, so they cannot displace the debt
-    the driver is draining — but still ahead of verified names."""
-    from real_time_big_data_analytics_spark.registry import (
-        DRIVER_CHECK_DEFER,
-        _driver_receipts,
-        all_queries,
-    )
-
-    names = list(all_queries())
-    verified, _red = _driver_receipts()
-    # a deferred name that has since earned a driver receipt sorts into
-    # the verified region by design — only still-unverified deferred
-    # names are held behind the pre-freeze tail (ADVICE r5)
-    deferred_idx = [
-        i
-        for i, n in enumerate(names)
-        if n in DRIVER_CHECK_DEFER and n not in verified
-    ]
-    if not deferred_idx:
-        pytest.skip("every deferred name already has a driver receipt")
-    prefreeze_unverified = [
-        i
-        for i, n in enumerate(names)
-        if n not in verified and n not in DRIVER_CHECK_DEFER
-    ]
-    if prefreeze_unverified:
-        assert min(deferred_idx) > max(prefreeze_unverified)
-    if verified:
-        first_verified = min(i for i, n in enumerate(names) if n in verified)
-        assert max(deferred_idx) < first_verified
-
-
-def test_rotation_order_independent_of_import_order():
-    """CORRECTNESS_r07 regression (found by the RECEIPTS.md drift
-    guard): the rotation tie-break used QUERIES dict insertion order,
+def test_registry_order_independent_of_import_order():
+    """all_queries() once ordered by QUERIES dict insertion order,
     which follows whichever queries_* module Python imported FIRST —
     under pytest a test file importing queries_text ahead of
-    queries_batch silently reordered the prefix the driver checks.
-    The canonical (module rank, in-module sequence) key must make the
-    order identical no matter the import order."""
+    queries_batch silently reordered the registry. The canonical
+    (module rank, in-module sequence) key must make the order
+    identical no matter the import order."""
     import subprocess
     import sys
 
     probe = (
         "from real_time_big_data_analytics_spark import {pre}registry\n"
-        "print('\\n'.join(registry.all_queries(receipt_max_round=6)))\n"
+        "print('\\n'.join(registry.all_queries()))\n"
     )
     clean = probe.format(pre="")
     polluted = probe.format(
@@ -177,4 +110,4 @@ def test_rotation_order_independent_of_import_order():
         )
         assert r.returncode == 0, r.stderr[-2000:]
         outs.append(r.stdout)
-    assert outs[0] == outs[1], "rotation order depends on import order"
+    assert outs[0] == outs[1], "registry order depends on import order"

@@ -108,6 +108,40 @@ def test_knn_ivf_indexed_prunes_partitions_and_matches_live_ivf(spark, sf_dir, t
     assert again == {(r.query_id, r.vec_id, r.sim) for r in rows}
 
 
+def test_staged_index_dirs_are_removed_at_process_exit(sf_dir, tmp_path):
+    """Staged index dirs carry the per-process token, so no later
+    process can reuse them: the process that stages one must remove it
+    (and any ``.staging-*`` leftover) when it exits."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, os, sys\n"
+        "from real_time_big_data_analytics_spark.operators import similarity\n"
+        "tag, d = similarity._proc_stage_dir('hnswidx', sys.argv[1])\n"
+        "stage = d + '.staging-0'\n"
+        "for p in (d, stage):\n"
+        "    os.makedirs(p)\n"
+        "    open(os.path.join(p, 'part'), 'w').close()\n"
+        "print(json.dumps([d, stage]))\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code, sf_dir],
+        capture_output=True,
+        text=True,
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    staged = json.loads(r.stdout.strip().splitlines()[-1])
+    assert all(p.startswith(str(tmp_path)) for p in staged), staged
+    assert not [p for p in staged if os.path.exists(p)]
+    assert os.listdir(tmp_path) == []
+
+
 def test_matryoshka_audit_distortion_is_bounded_and_ordered(spark, sf_dir):
     from real_time_big_data_analytics_spark.operators.similarity import (
         matryoshka_truncation_audit,

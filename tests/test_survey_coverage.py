@@ -14,8 +14,6 @@ from __future__ import annotations
 import os
 import re
 
-import pytest
-
 from real_time_big_data_analytics_spark.registry import all_queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -132,7 +130,8 @@ COMPONENT_COVERAGE: dict[str, tuple[str, ...]] = {
         "t8_stateful_user_stats",
         "t17_stream_stateful_ewma",
         # round 9: transformWithStateInPandas runs LIVE via the
-        # protobuf shim (registry exclusion boundary in NOTES_r09 §6)
+        # protobuf shim; it stays out of the registry because the shim
+        # must be on PYTHONPATH before the JVM starts
         "pytest:tests/test_protobuf_shim.py",
     ),
     # §2.9 LLM-data-pipeline operators
@@ -209,22 +208,3 @@ def test_non_na_components_have_at_least_one_query_or_test():
         if all(e.startswith("n/a:") for e in evidence):
             continue
         assert any(not e.startswith("n/a:") for e in evidence), comp
-
-
-def test_receipt_ledger_consistent_with_rotation():
-    """The ledger (VERDICT r5 ask #8) is the single receipt parse the
-    rotation derives from: every green-leger name must sort behind
-    every no-receipt name in all_queries() order."""
-    from real_time_big_data_analytics_spark.registry import receipt_ledger
-
-    ledger = receipt_ledger()
-    names = list(all_queries())
-    greens = {n for n, e in ledger.items() if e["green_rounds"]}
-    if not greens or len(greens) == len(names):
-        pytest.skip("rotation only observable with a partial receipt")
-    for n, e in ledger.items():
-        assert e["last_green"] == (e["green_rounds"][-1] if e["green_rounds"] else None)
-        assert e["green_rounds"] == sorted(e["green_rounds"])
-    first_green = min(i for i, n in enumerate(names) if n in greens)
-    last_unreceipted = max(i for i, n in enumerate(names) if n not in greens)
-    assert last_unreceipted < first_green

@@ -1,10 +1,10 @@
 """BENCH_SF1 (VERDICT r7 ask #4): the headline suite's top-10
 wall-clock queries re-measured at an sf1-EQUIVALENT dataset (~6 M
 lineitem rows) built by tools/scale_smoke's join-preserving 10x
-replication of sf0.1, with the same ambient capture bench.py records.
+replication of sf0.1.
 
-Selection: the ten most expensive FACT-SCALING queries from the latest
-BENCH_SUMMARY (l3_mmr_diversified_topk is excluded and documented —
+Selection: the ten most expensive FACT-SCALING queries of the round-7
+headline bench (``git show 630fba5:BENCH_SUMMARY_r07.json``; l3_mmr_diversified_topk is excluded and documented —
 its input, embeddings, is a dimension table in this harness, so a 10x
 fact replication measures nothing about it). Document-PAIR queries run
 on the mostly-unique tagged corpus (scale_smoke.UNIQUE_QUERIES): a
@@ -31,10 +31,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import bench  # noqa: E402  (ambient capture + force, shared with the driver bench)
+import bench  # noqa: E402  (the noop-sink force)
 from tools import scale_smoke  # noqa: E402
 
-# Top-10 by BENCH_SUMMARY_r07 wall clock, fact-scaling only (see
+# Top-10 by round-7 headline wall clock, fact-scaling only (see
 # module docstring for the one exclusion).
 TOP10 = (
     "l6_training_mix_v2",
@@ -110,7 +110,6 @@ def main() -> None:
     def fn_of(name):
         return special[name] if name in special else queries[name].fn
 
-    amb_pre = bench._ambient()
     big = scale_smoke.build(spark, args.sf, args.k)
     big_uniq = (
         scale_smoke.build_unique(spark, args.sf, args.k)
@@ -154,8 +153,6 @@ def main() -> None:
         "base_sf": args.sf,
         "queries": report,
         "excluded": EXCLUDED,
-        "ambient_pre": amb_pre,
-        "ambient_post": bench._ambient(),
     }
     if args.merge and os.path.exists(path):
         with open(path) as f:
@@ -166,7 +163,6 @@ def main() -> None:
         out["merged_rounds"] = sorted(
             set(prev.get("merged_rounds") or []) | {"r11"}
         )
-        out["ambient_pre_prev"] = prev.get("ambient_pre")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({"wrote": path, "k": args.k,

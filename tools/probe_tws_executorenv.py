@@ -4,8 +4,8 @@ the transformWithState state-server workers — i.e. is there an
 IN-SESSION activation route that does not require the driver process
 itself to be launched with the shim on PYTHONPATH?
 
-Earlier probes (NOTES_r09 §6) covered late os.environ mutation and
-addPyFile — both crash. This one must run from a CLEAN environment
+Earlier probes covered late os.environ mutation and addPyFile after
+session creation — both crash the state-server worker. This one must run from a CLEAN environment
 (no PYTHONPATH): `env -u PYTHONPATH python tools/probe_tws_executorenv.py`.
 Prints one PROBE line; exit 0 either way (the OUTCOME is the datum).
 """

@@ -1,6 +1,6 @@
-"""Time individual queries with the bench's methodology (noop sink,
-min-of-N after a warm-up) without the full headline sweep — the
-optimization round's inner measurement loop.
+"""Time individual queries: each forced through the noop sink, min-of-N
+after a shared warm-up of the JVM/session. Prints one line per query,
+then one JSON line ``{name: {"min": s, "runs": [s, ...]}}``.
 
 Usage:
     python tools/time_queries.py [--sf DIR] [--runs 3] name...
@@ -17,24 +17,21 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import SF_DIR, force
 from real_time_big_data_analytics_spark.registry import all_queries
 from real_time_big_data_analytics_spark.session import get_spark
 
 
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf", default=SF_DIR)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("names", nargs="+")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     spark = get_spark("rtba-time-queries")
     queries = all_queries()
-    # same warm-up as bench.py: JVM/codegen/streaming machinery once
+    # warm the JVM/codegen/streaming machinery once
     warm_sf = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_sf):
         warm_sf = args.sf
