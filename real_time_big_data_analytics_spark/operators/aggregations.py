@@ -8,14 +8,22 @@ now-15m time filter (A5), and count-over-time (A6).
 
 Scale notes
 -----------
-Every groupBy here compiles to a partial (map-side) HashAggregate +
-one shuffle on the group keys + final HashAggregate — the minimal
-shuffle plan. Group-key cardinality is tiny (event types, languages,
-sources), so the shuffle moves only pre-aggregated rows regardless of
-input size; these run unchanged at 100 TB. The top-k+Other operator is
-two aggregations (term counts → rank) where the ranking input is
-already reduced to distinct-term cardinality, so the window sort is
-cheap by construction.
+The panels read through ``load_narrow``. When the table file is one
+local file no larger than ``min(spark.sql.files.maxPartitionBytes,
+spark.sql.files.openCostInBytes)`` (4 MB by default; sf0.1 ``events``
+is 2.0 MB, ``documents`` 0.6 MB) its scan is one split on any core
+count, and the scan is coalesced to one partition. That partition
+satisfies every aggregate's and the global rank window's required
+distribution, so the plan has no exchange and a panel runs as ONE
+job (two for A5, below). A larger file, such as sf1 ``events``
+(~20 MB), keeps its scan parallelism: every groupBy then compiles to
+a partial (map-side) HashAggregate + one shuffle on the group keys +
+final HashAggregate, the minimal shuffle plan. Group-key cardinality
+is tiny (event types, languages, sources), so that shuffle moves only
+pre-aggregated rows regardless of input size; these run unchanged at
+100 TB. The top-k+Other operator is two aggregations (term counts →
+rank) where the ranking input is already reduced to distinct-term
+cardinality, so the window sort is cheap by construction.
 """
 
 from __future__ import annotations
@@ -24,18 +32,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round2
-from ..sources.tables import load_table
+from ..sources.tables import load_narrow, load_table
 
 
 def count_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 — record count per class ("bolt users" donut)."""
-    events = load_table(spark, sf_dir, "events")
+    events = load_narrow(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(F.count("*").alias("n"))
 
 
 def sum_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — donut sized by sum(value) per class."""
-    events = load_table(spark, sf_dir, "events")
+    events = load_narrow(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         round2(F.sum("value")).alias("total_value"),
         F.count("*").alias("n"),
@@ -61,13 +69,13 @@ def _topk_other(df: DataFrame, term: str, k: int) -> DataFrame:
 
 def topk_sources_other(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """A2 — top-k `documents.source` terms + "Other" (location panel analog)."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_narrow(spark, sf_dir, "documents")
     return _topk_other(docs, "source", k)
 
 
 def topk_lang_other(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     """A4 — top-k `documents.lang` terms + "Other" (language panel analog)."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_narrow(spark, sf_dir, "documents")
     return _topk_other(docs, "lang", k)
 
 
@@ -77,9 +85,13 @@ def recent_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "now" is pinned to max(ts) of the table so the query is
     deterministic. The 1-row max aggregate is broadcast, so the filter
     costs one scan + one broadcast-hash semi-style comparison — no
-    shuffle of the fact table.
+    shuffle of the fact table. Over a narrowed scan this still runs
+    TWO jobs: the broadcast's max(ts) is a job of its own. A
+    ``max(ts) over ()`` window would make it one, but at scale, where
+    the scan is not narrowed, that window moves the whole fact table
+    into one partition.
     """
-    events = load_table(spark, sf_dir, "events")
+    events = load_narrow(spark, sf_dir, "events")
     max_ts = events.agg(F.max("ts").alias("max_ts"))
     return (
         events.join(F.broadcast(max_ts))
@@ -95,7 +107,7 @@ def counts_over_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uses the same event-time tumbling semantics as the streaming twin
     (streaming/windows.py); batch and stream share one definition.
     """
-    events = load_table(spark, sf_dir, "events")
+    events = load_narrow(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
@@ -110,7 +122,7 @@ def flagship_windowed_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     count A1 + sum A3 sliced by Kibana's time histogram A6) as one
     native event-time aggregation.
     """
-    events = load_table(spark, sf_dir, "events")
+    events = load_narrow(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), round2(F.sum("value")).alias("total_value"))

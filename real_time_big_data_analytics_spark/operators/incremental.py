@@ -126,13 +126,13 @@ def gdpr_forget_audit(
     SQL-derivable, so the oracle checks the deletion itself, not just
     plumbing.
     """
-    import tempfile
+    from ..streaming.runner import _session_tmpdir
 
     events = load_table(spark, sf_dir, "events")
     bucketed = events.withColumn(
         "user_bucket", (F.col("user_id") % n_buckets).cast("int")
     )
-    root = tempfile.mkdtemp(prefix="rtba_gdpr_")
+    root = _session_tmpdir("rtba_gdpr_")
     bucketed.write.mode("overwrite").partitionBy("user_bucket").parquet(root)
 
     # the delete: rewrite ONLY the forget bucket's partition

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round2
-from ..sources.tables import load_table
+from ..sources.tables import load_narrow, load_table
 
 SEED = 42
 FEATURES = [
@@ -50,8 +50,12 @@ def user_activity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately exclude the error counts themselves so the tree has
     to learn correlated structure, not read the label back.
     """
-    events = load_table(spark, sf_dir, "events")
-    per_user = events.groupBy("user_id").agg(
+    return _activity_profile(load_table(spark, sf_dir, "events"))
+
+
+def _activity_profile(events: DataFrame) -> DataFrame:
+    """The per-user features and label of :func:`user_activity_features`."""
+    return events.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
         F.sum((F.col("event_type") == "click").cast("int")).alias("n_clicks"),
         F.sum((F.col("event_type") == "purchase").cast("int")).alias("n_purchases"),
@@ -65,7 +69,6 @@ def user_activity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("label"),
     )
-    return per_user
 
 
 def _assembler():
@@ -293,9 +296,16 @@ def holdout_eval_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def label_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class distribution of the derived training fixture — the
-    SQL-checkable half of the ML path (the tree itself is rows-only)."""
+    SQL-checkable half of the ML path (the tree itself is rows-only).
+
+    This dashboard panel reads a narrowed scan (one job);
+    :func:`user_activity_features` does not, because the seeded
+    ``randomSplit`` of its holdout consumers samples each partition
+    with its own seed, so their split follows the features'
+    partitioning.
+    """
     return (
-        user_activity_features(spark, sf_dir)
+        _activity_profile(load_narrow(spark, sf_dir, "events"))
         .groupBy("label")
         .agg(F.count("*").alias("n_users"))
     )

@@ -1389,7 +1389,6 @@ def _python_datasource_stream(spark, sf_dir):
     stream equal the batch aggregate — the oracle checks the custom
     source's offset accounting end-to-end (a dropped or re-read shard
     changes the counts)."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -1403,7 +1402,7 @@ def _python_datasource_stream(spark, sf_dir):
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
     )
-    from .streaming.runner import _stream_shuffle_partitions
+    from .streaming.runner import _session_tmpdir, _stream_shuffle_partitions
 
     name = f"pyds_{uuid.uuid4().hex[:12]}"
     with _stream_shuffle_partitions(spark):
@@ -1411,7 +1410,7 @@ def _python_datasource_stream(spark, sf_dir):
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_pyds_"))
+            .option("checkpointLocation", _session_tmpdir("rtba_ckpt_pyds_"))
             .start()
         )
         try:
@@ -1760,13 +1759,12 @@ def _kafka_wire_stream(spark, sf_dir):
     complete-mode aggregate. Prefix consistency over the static topic
     makes the drained stream equal the batch aggregate; a dropped or
     re-read partition changes the counts."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from .sources.pyds import stream_events_via_kafka_wire
-    from .streaming.runner import _stream_shuffle_partitions
+    from .streaming.runner import _session_tmpdir, _stream_shuffle_partitions
 
     stream = stream_events_via_kafka_wire(spark, sf_dir)
     parsed = stream.select(F.from_json("value", _WIRE_EVENT_SCHEMA).alias("r")).select(
@@ -1784,7 +1782,7 @@ def _kafka_wire_stream(spark, sf_dir):
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_kwire_"))
+            .option("checkpointLocation", _session_tmpdir("rtba_ckpt_kwire_"))
             .start()
         )
         try:
@@ -4620,13 +4618,12 @@ def _avro_ocf_stream(spark, sf_dir):
     consistency over the static file set makes the drained stream
     equal the batch aggregate; a dropped or re-read file changes the
     counts."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from .sources.pyds import stream_events_via_avro_ocf
-    from .streaming.runner import _stream_shuffle_partitions
+    from .streaming.runner import _session_tmpdir, _stream_shuffle_partitions
 
     stream = stream_events_via_avro_ocf(spark, sf_dir, codec="deflate")
     agg = stream.groupBy("event_type").agg(
@@ -4642,7 +4639,7 @@ def _avro_ocf_stream(spark, sf_dir):
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_avro_"))
+            .option("checkpointLocation", _session_tmpdir("rtba_ckpt_avro_"))
             .start()
         )
         try:

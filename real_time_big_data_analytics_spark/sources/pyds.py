@@ -549,11 +549,11 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
     import atexit
     import hashlib
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from . import kafka_wire as KW
+    from ..streaming.runner import _session_tmpdir
     from .tables import load_table
 
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
@@ -563,8 +563,8 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
     if tag in _GROUP_RESUME_DIRS:
         return _GROUP_RESUME_DIRS[tag]
 
-    data_dir = tempfile.mkdtemp(prefix="rtba_grp_broker_")
-    out_dir = tempfile.mkdtemp(prefix="rtba_grp_consumed_")
+    data_dir = _session_tmpdir("rtba_grp_broker_")
+    out_dir = _session_tmpdir("rtba_grp_consumed_")
     topic, nparts, group = WIRE_GROUP_TOPIC, WIRE_NPARTS, "group"
     pkg = _repo_root()
 
@@ -2127,12 +2127,11 @@ def stage_events_via_es_sink_datasource(spark, sf_dir: str) -> str:
     into its own index (staged once per fingerprint); returns the
     index name."""
     import json
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from . import es_wire as EW
-    from ..streaming.runner import _stream_shuffle_partitions, events_stream
+    from ..streaming.runner import _session_tmpdir, _stream_shuffle_partitions, events_stream
 
     addr = _es_addr(spark, sf_dir)
     index = "events_sink_ds"
@@ -2160,9 +2159,7 @@ def stage_events_via_es_sink_datasource(spark, sf_dir: str) -> str:
             .option("addr", addr)
             .option("index", index)
             .option("pkg", _repo_root())
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="rtba_ckpt_essink_")
-            )
+            .option("checkpointLocation", _session_tmpdir("rtba_ckpt_essink_"))
             .trigger(availableNow=True)
             .start()
         )

@@ -13,6 +13,7 @@ Catalyst; nothing in the query layer needs to change.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -147,12 +148,55 @@ def spread(df: DataFrame) -> DataFrame:
     HOF work would serialize on one core — measured 2.5 s → 0.4 s on
     the sf0.1 shingle stage. At production scale a table has far more
     row groups than cores, the predicate is false, and no shuffle is
-    added.
+    added. Its inverse, for cheap aggregations over such a scan, is
+    :func:`load_narrow`.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
+    return df
+
+
+# Spark's byte-string suffixes (JavaUtils.byteStringAsBytes), binary.
+_BYTE_UNITS = {
+    "": 1, "b": 1, "k": 2**10, "kb": 2**10, "m": 2**20, "mb": 2**20, "g": 2**30, "gb": 2**30
+}
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size session conf ("4194304b", "4m", "128MB") in bytes;
+    0 (so nothing is narrowed) when the value does not parse."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", spark.conf.get(key).lower())
+    return int(m.group(1)) * _BYTE_UNITS.get(m.group(2), 0) if m else 0
+
+
+def load_narrow(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """:func:`load_table`, coalesced to one partition when the table
+    file is certain to be one split; otherwise the plain load.
+
+    Spark sizes file splits at ``min(maxPartitionBytes,
+    max(openCostInBytes, bytesPerCore))``, never below
+    ``min(spark.sql.files.maxPartitionBytes,
+    spark.sql.files.openCostInBytes)`` (4 MB by default). A local file
+    no larger than that is one split on any core count, so decided
+    from ``os.stat`` and the two confs, with no physical plan. The
+    ``Coalesce 1`` then reports ``SinglePartition``, which satisfies
+    every aggregate's and global window's required distribution: the
+    plan has no exchange, and AQE no shuffle stage to run as a job of
+    its own. A directory, a non-local path or a larger file (sf1
+    ``events``) keeps its scan parallelism. The inverse of
+    :func:`spread`, for the cheap dashboard aggregations whose per-job
+    cost outweighs the work on one split.
+    """
+    df = load_table(spark, sf_dir, name)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    bound = min(
+        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+        _conf_bytes(spark, "spark.sql.files.openCostInBytes"),
+    )
+    if os.path.isfile(path) and os.path.getsize(path) <= bound:
+        return df.coalesce(1)
     return df
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round2
 from ..sources.tables import load_table
-from .runner import events_stream, run_foreach_batch, run_to_table
+from .runner import _session_tmpdir, events_stream, run_foreach_batch, run_to_table
 
 
 def stream_windowed_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -532,12 +532,11 @@ def stream_cdc_materialize(spark: SparkSession, sf_dir: str, n_slices: int = 4) 
     executes multiple times per run.
     """
     import os
-    import tempfile
 
     from ..sources.tables import normalize_timestamps
 
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="rtba_cdc_src_")
+    stage = _session_tmpdir("rtba_cdc_src_")
     for i in range(n_slices):
         events.filter(F.col("event_id") % n_slices == i).coalesce(1).write.mode(
             "append"
@@ -548,7 +547,7 @@ def stream_cdc_materialize(spark: SparkSession, sf_dir: str, n_slices: int = 4) 
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(stage)
     )
 
-    serve_root = tempfile.mkdtemp(prefix="rtba_cdc_serve_")
+    serve_root = _session_tmpdir("rtba_cdc_serve_")
     state = {"current": None}
     pick = F.max(
         F.struct("ts", "event_id", "event_type", "value")

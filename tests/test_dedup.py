@@ -430,7 +430,8 @@ def test_training_mix_v2_matches_python_replay(spark, sf_dir):
 
 def test_size_prefilter_keeps_pairs_that_round_up_to_threshold(spark, tmp_path):
     """The pair is emitted on round2(J, 4) >= t, so the min/max size
-    prefilter must not prune a pair whose J only ROUNDS up to t.
+    prefilter (and ppjoin's prefix and positional bounds) must not
+    prune a pair whose J only ROUNDS up to t.
     Docs with nested distinct word 3-shingles: 31,999 of 40,000 gives
     J = min/max = 0.799975 -> 0.8 (emitted); 31,996 of 40,000 gives
     0.7999 (not emitted)."""
@@ -445,8 +446,11 @@ def test_size_prefilter_keeps_pairs_that_round_up_to_threshold(spark, tmp_path):
         "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
     )
     df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    got = {
-        (r.a_id, r.b_id): r.jaccard
-        for r in text.ngram_jaccard_pairs(spark, str(tmp_path), threshold=0.8).collect()
-    }
-    assert got == _brute_jaccard_pairs(docs) == {(1, 2): 0.8, (2, 3): 0.9999}
+    expected = {(1, 2): 0.8, (2, 3): 0.9999}
+    assert _brute_jaccard_pairs(docs) == expected
+    for op in (text.ngram_jaccard_pairs, text.ppjoin_jaccard_pairs):
+        got = {
+            (r.a_id, r.b_id): r.jaccard
+            for r in op(spark, str(tmp_path), threshold=0.8).collect()
+        }
+        assert got == expected, op.__name__

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from real_time_big_data_analytics_spark.sources import files
 
 SCHEMA = "id bigint, name string, score double"
@@ -437,3 +439,85 @@ def test_parquet_schema_reinfers_directories(spark, tmp_path):
     (d / "part-0.parquet").unlink()
     pq.write_table(pa.table({"b": pa.array(["x"], pa.string())}), d / "part-1.parquet")
     assert parquet_schema(spark, str(d)).simpleString() == "struct<b:string>"
+
+
+# Dashboard panels over single-split inputs: one job each, except a5,
+# whose 1-row max(ts) is a broadcast (a job of its own).
+PANEL_JOBS = {
+    "a1_count_by_group": 1,
+    "a2_topk_sources_other": 1,
+    "a3_sum_by_group": 1,
+    "a4_topk_lang_other": 1,
+    "a5_recent_window_counts": 2,
+    "a6_counts_over_time": 1,
+    "flagship_windowed_analytics": 1,
+    "m0_label_distribution": 1,
+}
+
+
+@pytest.mark.parametrize("panel", sorted(PANEL_JOBS))
+def test_dashboard_panel_job_count(spark, sf_dir, panel):
+    """Over a narrowed scan the panel's plan has no exchange, so AQE
+    submits no shuffle stage as a job of its own; construction (schema
+    already cached) submits none at all."""
+    import uuid
+
+    from real_time_big_data_analytics_spark.registry import all_queries
+
+    fn = all_queries()[panel].fn
+    fn(spark, sf_dir)  # caches the table schemas
+    tag = uuid.uuid4().hex[:8]
+    built = []
+    assert _job_ids(spark, f"build_{tag}", lambda: built.append(fn(spark, sf_dir))) == []
+    run = _job_ids(spark, f"run_{tag}", lambda: built[0].write.format("noop").mode("overwrite").save())
+    assert len(run) == PANEL_JOBS[panel]
+
+
+def _logical_plan(df) -> str:
+    return df._jdf.queryExecution().logical().toString()
+
+
+def test_load_narrow_coalesces_a_single_split_file_without_planning(spark, sf_dir, monkeypatch):
+    """The single-split test reads os.stat and two confs: no job, and
+    no physical plan (``df.rdd``, which ``spread()`` pays for)."""
+    import uuid
+
+    from real_time_big_data_analytics_spark.sources.tables import load_narrow
+
+    df = load_narrow(spark, sf_dir, "events")  # caches the schema
+    monkeypatch.setattr(type(df), "rdd", property(lambda self: pytest.fail("planned")))
+    built = []
+    group = f"narrow_{uuid.uuid4().hex[:8]}"
+    assert _job_ids(spark, group, lambda: built.append(load_narrow(spark, sf_dir, "events"))) == []
+    assert "Repartition 1, false" in _logical_plan(built[0])
+
+
+def test_load_narrow_keeps_parallelism_above_the_split_bound(spark, sf_dir):
+    """With openCostInBytes below the file size the file may be more
+    than one split, so the helper returns the plain load."""
+    import os
+
+    from real_time_big_data_analytics_spark.sources.tables import load_narrow
+
+    key = "spark.sql.files.openCostInBytes"
+    size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(size - 1))
+    try:
+        df = load_narrow(spark, sf_dir, "events")
+    finally:
+        spark.conf.set(key, prev)
+    assert "Repartition" not in _logical_plan(df)
+
+
+def test_load_narrow_leaves_directories_alone(spark, tmp_path):
+    """A part-file directory is never narrowed, however small."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from real_time_big_data_analytics_spark.sources.tables import load_narrow
+
+    d = tmp_path / "documents.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"doc_id": pa.array([1], pa.int64())}), d / "part-0.parquet")
+    assert "Repartition" not in _logical_plan(load_narrow(spark, str(tmp_path), "documents"))

@@ -1,5 +1,5 @@
 """tools/time_queries.py, the per-query timer: one run on the smoke
-tables prints a parseable JSON line."""
+tables prints a parseable JSON line with its job count."""
 
 from __future__ import annotations
 
@@ -21,3 +21,4 @@ def test_time_queries_prints_one_json_line(spark, sf_dir, capsys):
     assert list(out) == ["a1_count_by_group"]
     timing = out["a1_count_by_group"]
     assert len(timing["runs"]) == 1 and timing["min"] == timing["runs"][0] > 0
+    assert timing["jobs"] == 1  # the narrowed scan leaves no exchange

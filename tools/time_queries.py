@@ -1,6 +1,8 @@
 """Time individual queries: each forced through the noop sink, min-of-N
-after a shared warm-up of the JVM/session. Prints one line per query,
-then one JSON line ``{name: {"min": s, "runs": [s, ...]}}``.
+after a shared warm-up of the JVM/session. Each run (construction and
+execution) runs under its own Spark job group; ``jobs`` is the number
+of jobs the last run submitted. Prints one line per query, then one
+JSON line ``{name: {"min": s, "runs": [s, ...], "jobs": n}}``.
 
 Usage:
     python tools/time_queries.py [--sf DIR] [--runs 3] name...
@@ -38,17 +40,22 @@ def main(argv: list[str] | None = None) -> None:
     for wq in ("flagship_windowed_analytics", "j1_revenue_by_mktsegment"):
         force(queries[wq].fn(spark, warm_sf))
 
+    sc = spark.sparkContext
     out = {}
     for name in args.names:
         runs = []
         for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"{name} run {i}")
+            group = f"time_queries {name} run {i} {time.time_ns()}"
+            sc.setJobGroup(group, f"{name} run {i}")
             t0 = time.monotonic()
             force(queries[name].fn(spark, args.sf))
             runs.append(round(time.monotonic() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        out[name] = {"min": min(runs), "runs": runs}
-        print(f"{name}: min={min(runs)} runs={runs}", flush=True)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        out[name] = {"min": min(runs), "runs": runs, "jobs": jobs}
+        print(f"{name}: min={min(runs)} runs={runs} jobs={jobs}", flush=True)
     print(json.dumps(out))
 
 
