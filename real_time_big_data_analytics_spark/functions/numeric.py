@@ -17,6 +17,8 @@ bit-identical rounded values.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -41,3 +43,18 @@ def round2(col: Column | str, scale: int = 2) -> Column:
         F.when(ce - p >= 0.5, ce - 1).otherwise(ce)
     )
     return n / F.lit(float(10**scale))
+
+
+def round_half_up(x: float, scale: int) -> float:
+    """``round2``'s driver-side twin for Python floats: the same
+    exact-fractional-part comparison in the same IEEE double
+    operations, so driver-computed values round bit-identically to
+    the Spark expression and DuckDB's ``round(double, s)``."""
+    p = x * float(10**scale)
+    if p >= 0:
+        fl = float(math.floor(p))
+        n = fl + 1.0 if p - fl >= 0.5 else fl
+    else:
+        ce = float(math.ceil(p))
+        n = ce - 1.0 if ce - p >= 0.5 else ce
+    return n / float(10**scale)

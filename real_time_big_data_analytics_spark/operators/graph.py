@@ -32,7 +32,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import round2
+from ..functions.numeric import round2, round_half_up
 from ..sources.tables import load_table
 
 DAMPING = 0.85
@@ -81,8 +81,8 @@ def trade_pagerank(
     ``math.fsum`` of its terms: the correctly rounded sum, so the driver
     result does not depend on edge order and is at least as accurate as
     any distributed order (the DuckDB CTE sums in its own order; the
-    1e-6 output rounding absorbs its ulps). Final rounding uses the
-    MMR driver twin of round2's exact floor/ceil construction.
+    1e-6 output rounding absorbs its ulps). Final rounding uses
+    ``round_half_up``, round2's driver twin.
     NOTE plan captures: the operator is eager at construction (the
     ADVICE r11 eager-collect contract — plan_dump shows only the
     residual createDataFrame; the real work is the edge aggregate,
@@ -105,18 +105,6 @@ def trade_pagerank(
         (int(r.src), int(r.dst), float(r.p)) for r in trans.collect()
     )  # bounded: ≤ nation² edges at any corpus scale
 
-    def _round_s(x: float, scale: int) -> float:
-        # round2's exact construction (the MMR twin): compare the
-        # EXACT fractional part against 0.5 — C/DuckDB semantics
-        p = x * float(10**scale)
-        if p >= 0:
-            fl = float(math.floor(p))
-            n = fl + 1.0 if p - fl >= 0.5 else fl
-        else:
-            ce = float(math.ceil(p))
-            n = ce - 1.0 if ce - p >= 0.5 else ce
-        return n / float(10**scale)
-
     ranks = {v: 1.0 / n_nodes for v in nodes}
     for _ in range(n_iter):
         terms: dict[int, list[float]] = {}
@@ -126,7 +114,7 @@ def trade_pagerank(
             v: (1.0 - damping) / n_nodes + damping * math.fsum(terms.get(v, ()))
             for v in nodes
         }
-    out = [(names[v], _round_s(ranks[v], 6)) for v in nodes]
+    out = [(names[v], round_half_up(ranks[v], 6)) for v in nodes]
     return spark.createDataFrame(out, "n_name string, rank double")
 
 

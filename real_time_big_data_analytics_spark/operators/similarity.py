@@ -10,12 +10,23 @@ Python on the data path.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity, dot, l2_norm
-from ..functions.numeric import round2
+from ..functions.numeric import round2, round_half_up
+from ..sources.staging import fingerprint_dir, stage_once
 from ..sources.tables import load_table, spread
+from .hnsw import (
+    build_and_search,
+    compact_edges,
+    graph_stats,
+    insert_edges,
+    search_edges,
+)
 
 # Per-process staging token (optimization r12, VERDICT r11 what's-wrong
 # #1): every persisted index staging dir under /tmp folds this into its
@@ -38,15 +49,7 @@ def _proc_stage_dir(kind: str, sf_dir: str) -> tuple[str, str]:
     embeddings: the tag hashes the source file's fingerprint and the
     process token, and the dir (with any ``.staging-*`` sibling) is
     removed at interpreter exit."""
-    import hashlib
-    import os
-    import tempfile
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"{kind}|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{_PROC_STAGE_TOKEN}".encode()
-    ).hexdigest()[:12]
-    index_dir = os.path.join(tempfile.gettempdir(), f"rtba_{kind}_{tag}")
+    tag, index_dir = fingerprint_dir(kind, sf_dir, "embeddings", _PROC_STAGE_TOKEN)
     _remove_at_exit(index_dir)
     return tag, index_dir
 
@@ -293,8 +296,6 @@ def knn_ivf_indexed(
     difference between touching ~n_probe/n_cells of the files and
     touching all of them.
     """
-    import os
-
     import numpy as np
 
     if index_dir is None:
@@ -1229,20 +1230,6 @@ def mmr_diversified_topk(
             acc += x * y
         return acc
 
-    def _round_s(x: float, scale: int) -> float:
-        # round2's exact construction: compare the EXACT fractional
-        # part against 0.5 (never floor(p + 0.5)) — C/DuckDB semantics
-        import math
-
-        p = x * float(10**scale)
-        if p >= 0:
-            fl = float(math.floor(p))
-            n = fl + 1.0 if p - fl >= 0.5 else fl
-        else:
-            ce = float(math.ceil(p))
-            n = ce - 1.0 if ce - p >= 0.5 else ce
-        return n / float(10**scale)
-
     def _cos(a_id: int, b_id: int) -> float | None:
         import math
 
@@ -1252,7 +1239,7 @@ def mmr_diversified_topk(
             # ADVICE r11: Spark's divide yields NULL on a zero-norm
             # vector where Python raises — mirror the NULL
             return None
-        return _round_s(_fold_dot(a, b) / denom, 6)
+        return round_half_up(_fold_dot(a, b) / denom, 6)
 
     by_q: dict[int, list] = {}
     for r in pool_rows:
@@ -1297,7 +1284,7 @@ def mmr_diversified_topk(
             selected.append(vid)
             out_rows.append(
                 (qid, vid, sim, t,
-                 _round_s(score, 6) if score is not None else None)
+                 round_half_up(score, 6) if score is not None else None)
             )
     return spark.createDataFrame(
         out_rows,
@@ -1842,189 +1829,185 @@ def _sharded(df: DataFrame, n_groups: int = HNSW_SHARDS):
     if n_groups not in _SPREAD_PARTS_MEMO:
         _SPREAD_PARTS_MEMO[n_groups] = _spread_parts(n_groups)
     return df.repartition(_SPREAD_PARTS_MEMO[n_groups], "shard").groupBy("shard")
+
+
+def _shard_of(col: str, n_shards: int = HNSW_SHARDS):
+    """The deterministic shard of a vector (or edge row's node) id."""
+    return (F.col(col) % n_shards).cast("int")
+
+
 HNSW_EF_SWEEP = (4, 16, 64)
 # empirical per-ef recall floors pinned by tests at every harness SF;
 # chosen with margin below observed minima (see tests/test_similarity)
 HNSW_SWEEP_FLOORS = {4: 0.2, 16: 0.55, 64: 0.85}
+EDGE_SCHEMA = "node_id bigint, layer int, neighbor_id bigint"
+
+# The per-shard graph work runs in operators/hnsw.py's kernels; each
+# factory below closes one of them over its plain-list/int arguments.
 
 
 def _hnsw_candidate_fn(
     queries: list, k: int, efs: tuple, m: int, ef_c: int, emit: str = "candidates"
 ):
-    """Build the ``applyInPandas`` body: construct an HNSW graph over
-    ONE shard's vectors (Malkov & Yashunin 2016, public algorithm:
-    exponentially-distributed layers, greedy descent, beam search with
-    ef candidates, bidirectional M-bounded links) and search every
-    query at each requested ef. Nested def: cloudpickle ships it BY
-    VALUE (closure over plain lists/ints only — the verify-recipe
-    trap). Everything is deterministic: insertion order = sorted
-    vec_id, node level = hash(vec_id) (not RNG state), distances
-    rounded to 9 dp with index tie-breaks, neighbor iteration sorted.
+    """Grouped body: build ONE shard's HNSW graph and search every
+    query at each requested ef; ``emit="edges"`` returns the graph's
+    (node_id, layer, neighbor_id) rows instead — the PERSISTENCE path
+    (levels and the entry point are derivable from the id hash, so
+    edges are the whole index)."""
 
-    ``emit="edges"`` returns the constructed graph's adjacency rows
-    (node_id, layer, neighbor_id) instead of searching — the
-    PERSISTENCE path (levels and the entry point are derivable from
-    the id hash, so edges are the whole index).
+    def shard_kernel(pdf):
+        return build_and_search(pdf, queries, k, efs, m, ef_c, emit)
 
-    Optimization r12 (guide §4.2, VERDICT r11 ask #3): distances are
-    vectorized per query/insertion — ONE einsum row instead of a numpy
-    dot per visited neighbor (123k per sf0.1 shard, ~70% of kernel
-    time was per-call numpy overhead), and adjacency lists are kept
-    sorted so the per-step ``sorted()`` disappears. The vectorized
-    row ``np.round(1.0 - einsum(unit, qu), 9)`` is EXACTLY equal to
-    the scalar ``round(1.0 - float(unit[i] @ qu), 9)`` for every
-    distance this corpus produces (pinned exhaustively in
-    tests/test_hnsw_vectorized_rounding.py), so graphs and results are
-    bit-identical to the r11 kernel (verified frame-equal at all 3 SFs
-    per shard, both emit modes). Above ``FULL_DOT_MAX`` rows the
-    kernel falls back to the scalar per-neighbor path: a full O(n) row
-    per insertion would not be scale-safe on RAM-sized big shards,
-    while the beam search touches O(ef·deg·log n) nodes. einsum, not
-    BLAS matmul, on purpose: gemv engages OpenBLAS threading, which
-    under concurrent Spark tasks measured 6x SLOWER than the scalar
-    loop; einsum is single-threaded regardless of worker env."""
+    return shard_kernel
 
-    def build_and_search(pdf):
-        import heapq
-        import math
-        from bisect import bisect_left
 
-        import numpy as np
-        import pandas as pd
+def _hnsw_search_edges_fn(
+    queries: list, k: int, ef: int, m: int, excluded: frozenset = frozenset()
+):
+    """Cogrouped search body: one shard's VECTORS (left) + its
+    persisted EDGE rows (right) → per-query local top-k candidates, by
+    a fresh build's own descent and beam (tests/test_similarity.py pins
+    indexed ≡ fresh-build results EXACTLY). ``excluded`` is a TOMBSTONE
+    set: traversal runs THROUGH tombstoned nodes (they are still edges
+    in the graph — removing them from the descent would strand their
+    neighborhoods) but an excluded id is never EMITTED, the serve-side
+    semantics between a delete and the compaction that removes it."""
 
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(pdf["embedding"].to_numpy())[order].astype(np.float64)
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        n = len(ids)
-        FULL_DOT_MAX = 8192  # full-row precompute pays below this n
+    def shard_kernel(vec_pdf, edge_pdf):
+        return search_edges(vec_pdf, edge_pdf, queries, k, ef, m, excluded)
 
-        def dist_row(qu):
-            # rounded-distance row; == round(1.0 - float(unit[i] @ qu), 9)
-            # elementwise on this corpus (pinned by test)
-            return np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
+    return shard_kernel
 
-        def d_to(qu, i):
-            # rounded cosine distance: deterministic tie-breaks
-            return round(1.0 - float(unit[i] @ qu), 9)
 
-        # deterministic "uniform" level draw from the vector id
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, list]] = [
-            {layer: [] for layer in range(lv + 1)} for lv in level_of
-        ]
+def _hnsw_insert_fn(m: int, ef_c: int):
+    """Cogrouped insert body: one shard's vectors (base + new, flagged
+    ``is_new``) + the shard's PERSISTED base edges → the updated full
+    edge set. The base adjacency is RECONSTRUCTED from the edge rows
+    (no base-base distance is ever recomputed); only the inserted
+    nodes run the graph build's insert loop (tests pin degree bounds +
+    connectivity)."""
 
-        def search_layer(qu, dv, eps, ef, layer):
-            """Beam search: returns [(dist, idx)] ascending, <= ef."""
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nb in adj[c].get(layer, ()):
-                    if nb in visited:
-                        continue
-                    visited.add(nb)
-                    dn = dq(nb)
-                    if len(res) < ef or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nb))
-                        heapq.heappush(res, (-dn, nb))
-                        if len(res) > ef:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
+    def shard_kernel(vec_pdf, edge_pdf):
+        return insert_edges(vec_pdf, edge_pdf, m, ef_c)
 
-        def _insert_sorted(lst, x):
-            p = bisect_left(lst, x)
-            if p == len(lst) or lst[p] != x:
-                lst.insert(p, x)
+    return shard_kernel
 
-        entry, top = None, -1
-        for i in range(n):
-            li = level_of[i]
-            if entry is None:
-                entry, top = i, li
-                continue
-            qu = unit[i]
-            dv = dist_row(qu) if n <= FULL_DOT_MAX else None
-            ep = [entry]
-            for layer in range(top, li, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            for layer in range(min(top, li), -1, -1):
-                cands = search_layer(qu, dv, ep, ef_c, layer)
-                mmax = m if layer > 0 else 2 * m
-                for _, e in cands[:m]:
-                    _insert_sorted(adj[i][layer], e)
-                    lst_e = adj[e][layer]
-                    _insert_sorted(lst_e, i)
-                    if len(lst_e) > mmax:
-                        ds = np.round(
-                            1.0 - np.einsum("ij,j->i", unit[lst_e], unit[e]), 9
-                        )
-                        keyed = sorted(zip(ds.tolist(), lst_e))[:mmax]
-                        adj[e][layer] = sorted(x for _, x in keyed)
-                ep = [e for _, e in cands]
-            if li > top:
-                entry, top = i, li
 
-        if emit == "edges":
-            rows_n, rows_l, rows_nb = [], [], []
-            for i in range(n):
-                for layer, nbrs in adj[i].items():
-                    for nb in nbrs:
-                        rows_n.append(int(ids[i]))
-                        rows_l.append(layer)
-                        rows_nb.append(int(ids[nb]))
-            return pd.DataFrame(
-                {"node_id": rows_n, "layer": rows_l, "neighbor_id": rows_nb}
-            )
+def _hnsw_graph_stats_fn(m: int):
+    """Cogrouped audit body over (vectors, edge rows): per-shard
+    structural invariants of the UPDATED graph — every node present,
+    every appended node reachable from the entry point (layer-0 BFS;
+    retrievability IS connectivity in a beam-searched graph), and the
+    M-bound held through the append's overflow pruning."""
 
-        out_q, out_v, out_ef = [], [], []
-        qrows: dict = {}  # per-query distance row, shared across efs
-        for ef in efs:
-            for qid, qvec in queries:
-                qu = np.asarray(qvec, dtype=np.float64)
-                qn = math.sqrt(float(qu @ qu))
-                qu = qu / max(qn, 1e-12)
-                if qid in qrows:
-                    dv = qrows[qid]
-                elif n <= FULL_DOT_MAX:
-                    dv = qrows[qid] = dist_row(qu)
-                else:
-                    dv = None
-                ep = [entry]
-                for layer in range(top, 0, -1):
-                    ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-                # beam width IS ef (+1 covers self-exclusion): an
-                # ef below k legitimately returns fewer than k hits,
-                # which is exactly what the recall sweep measures
-                res = search_layer(qu, dv, ep, ef + 1, 0)
-                taken = 0
-                for _d, e in res:
-                    if int(ids[e]) == qid:
-                        continue  # never return the query itself
-                    out_q.append(qid)
-                    out_v.append(int(ids[e]))
-                    out_ef.append(ef)
-                    taken += 1
-                    if taken >= k:
-                        break
-        return pd.DataFrame(
-            {"query_id": out_q, "vec_id": out_v, "ef": out_ef}
+    def shard_kernel(vec_pdf, edge_pdf):
+        return graph_stats(vec_pdf, edge_pdf, m)
+
+    return shard_kernel
+
+
+def _hnsw_compact_fn(m: int):
+    """Cogrouped compaction body: one shard's vectors (flagged
+    ``is_deleted``) + its edge rows → the repaired SURVIVOR-ONLY edge
+    set. For every deleted node d at every layer, d's surviving
+    neighbors are re-linked pairwise (the standard one-hop repair:
+    the hole d leaves is bridged by its own neighborhood), then every
+    survivor's list drops deleted targets and re-prunes to the M
+    bound by the graph build's prune rule — so the output graph is
+    self-contained (zero edges into deleted nodes) and degree-bounded."""
+
+    def shard_kernel(vec_pdf, edge_pdf):
+        return compact_edges(vec_pdf, edge_pdf, m)
+
+    return shard_kernel
+
+
+def _query_vectors(emb: DataFrame) -> list:
+    """The N_QUERIES demo query vectors as (vec_id, [float]) pairs,
+    shipped into the search kernels by value."""
+    return [
+        (int(r.vec_id), [float(x) for x in r.embedding])
+        for r in emb.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()  # bounded: the N_QUERIES demo query vectors
+    ]
+
+
+def _rescored(cands: DataFrame, emb: DataFrame, *keep: str) -> DataFrame:
+    """HNSW candidates re-scored with the SAME Catalyst cosine
+    expression as the exact path, so sims are bit-identical to brute
+    force for the pairs returned; ``keep`` columns lead the output."""
+    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
+    )
+    return (
+        cands.join(emb.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(qdf), "query_id")
+        .select(
+            *keep,
+            "query_id",
+            "vec_id",
+            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
         )
+    )
 
-    return build_and_search
+
+def _built_edges(corpus: DataFrame) -> DataFrame:
+    """Every shard's freshly built graph as shard-tagged edge rows."""
+    fn = _hnsw_candidate_fn([], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges")
+    return (
+        _sharded(corpus)
+        .applyInPandas(fn, EDGE_SCHEMA)
+        .withColumn("shard", _shard_of("node_id"))
+    )
+
+
+def _served(
+    corpus: DataFrame,
+    edges: DataFrame,
+    queries: list,
+    k: int = TOP_K,
+    ef: int = HNSW_EF_SEARCH,
+    excluded: frozenset = frozenset(),
+) -> DataFrame:
+    """Per-shard candidates from searching the persisted graph
+    ``edges`` over ``corpus``: the vectors and the index cogroup on
+    shard, one task per shard."""
+    fn = _hnsw_search_edges_fn(queries, k, ef, HNSW_M, excluded)
+    return (
+        _sharded(corpus)
+        .cogroup(_sharded(edges))
+        .applyInPandas(fn, "query_id bigint, vec_id bigint")
+    )
+
+
+def _graph_stats(corpus: DataFrame, edges: DataFrame) -> DataFrame:
+    """Per-shard ``_hnsw_graph_stats_fn`` rows of ``edges``."""
+    return (
+        _sharded(corpus)
+        .cogroup(_sharded(edges))
+        .applyInPandas(
+            _hnsw_graph_stats_fn(HNSW_M),
+            "n_vectors bigint, n_new bigint, n_new_connected bigint, "
+            "degree_violations bigint",
+        )
+    )
+
+
+def _recall_floor_met(approx: DataFrame, true_k: DataFrame) -> DataFrame:
+    """One-row ``recall_floor_met``: ``approx`` holds at least the
+    fresh-build floor's share of ``true_k``'s (query_id, vec_id) pairs."""
+    return (
+        approx.join(true_k, ["query_id", "vec_id"], "inner")
+        .agg(F.count("*").alias("hits"))
+        .crossJoin(true_k.agg(F.count("*").alias("total")))
+        .select(
+            (
+                F.col("hits")
+                >= F.lit(HNSW_APPEND_RECALL_FLOOR) * F.col("total")
+            ).alias("recall_floor_met")
+        )
+    )
 
 
 def _hnsw_candidates(
@@ -2044,18 +2027,10 @@ def _hnsw_candidates(
     wire. Query vectors are bounded driver-side metadata (N_QUERIES
     rows), like the IVF/MMR paths."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % n_shards).cast("int")
-    )
     fn = _hnsw_candidate_fn(
-        queries, k, tuple(efs), HNSW_M, HNSW_EF_CONSTRUCTION
+        _query_vectors(emb), k, tuple(efs), HNSW_M, HNSW_EF_CONSTRUCTION
     )
+    corpus = emb.withColumn("shard", _shard_of("vec_id", n_shards))
     return _sharded(corpus, n_groups=n_shards).applyInPandas(
         fn, "query_id bigint, vec_id bigint, ef int"
     )
@@ -2068,24 +2043,10 @@ def knn_hnsw(
     ef_search: int = HNSW_EF_SEARCH,
 ) -> DataFrame:
     """L3 — HNSW top-k: per-shard graph search, candidates re-scored
-    with the SAME Catalyst cosine expression as the exact path (so
-    sims are bit-identical to brute force for the pairs returned),
-    merged into the global top-k."""
+    with the exact Catalyst cosine, merged into the global top-k."""
     cands = _hnsw_candidates(spark, sf_dir, k, (ef_search,)).drop("ef")
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    return _ranked_topk(sims, k)
+    return _ranked_topk(_rescored(cands, emb), k)
 
 
 def knn_hnsw_checked(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2104,22 +2065,8 @@ def hnsw_recall_sweep(
     oracle is the bound-assertion twin: exact n_queries/k columns plus
     per-ef asserted invariants (recall >= pinned floor, all candidate
     sims match the exact cosine, result sets within k)."""
-    efs = HNSW_EF_SWEEP
-    cands = _hnsw_candidates(spark, sf_dir, k, efs)
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "ef",
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
+    cands = _hnsw_candidates(spark, sf_dir, k, HNSW_EF_SWEEP)
+    sims = _rescored(cands, spread(load_table(spark, sf_dir, "embeddings")), "ef")
     ranked = sims.withColumn(
         "rk",
         F.row_number().over(
@@ -2173,8 +2120,6 @@ ORDER BY ef
 
 # --- HNSW persisted index: build once, search many (round 9) ----------
 
-_HNSW_INDEX_DIRS: dict[str, str] = {}
-
 
 def hnsw_index_write(spark: SparkSession, sf_dir: str) -> str:
     """Persist the per-shard HNSW graphs as a shard-partitioned
@@ -2182,152 +2127,19 @@ def hnsw_index_write(spark: SparkSession, sf_dir: str) -> str:
     (``ivf_index_write``): build once, search many. Only the adjacency
     needs storing; node levels and the entry point are pure functions
     of the vector id (the deterministic level draw), so the index is
-    exactly (node_id, layer, neighbor_id) rows. Staged once per process per corpus
-    fingerprint (the _PROC_STAGE_TOKEN discipline) via build-in-scratch + atomic rename (the delta-stager
-    crash-idempotency discipline)."""
-    import os
-    import shutil
-    import uuid
-
+    exactly (node_id, layer, neighbor_id) rows. Staged once per process
+    per corpus fingerprint (the _PROC_STAGE_TOKEN discipline) via
+    ``stage_once``."""
     tag, index_dir = _proc_stage_dir("hnswidx", sf_dir)
-    if tag in _HNSW_INDEX_DIRS:
-        return _HNSW_INDEX_DIRS[tag]
-    done = os.path.join(index_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(index_dir):
-            shutil.rmtree(index_dir)
-        stage = f"{index_dir}.staging-{uuid.uuid4().hex[:12]}"
+
+    def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
-        corpus = emb.withColumn(
-            "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
+        corpus = emb.withColumn("shard", _shard_of("vec_id"))
+        _built_edges(corpus).write.partitionBy("shard").parquet(
+            os.path.join(stage, "edges")
         )
-        fn = _hnsw_candidate_fn(
-            [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
-        )
-        edges = _sharded(corpus).applyInPandas(
-            fn, "node_id bigint, layer int, neighbor_id bigint"
-        ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
-        edges.write.partitionBy("shard").parquet(os.path.join(stage, "edges"))
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, index_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _HNSW_INDEX_DIRS[tag] = index_dir
-    return index_dir
 
-
-def _hnsw_search_edges_fn(queries: list, k: int, ef: int, m: int):
-    """Cogrouped search body: one shard's VECTORS (left) + its
-    persisted EDGE rows (right) → per-query local top-k candidates.
-    Reconstructs the adjacency and replays exactly the search the
-    inline builder runs (same rounded distances, same tie-breaks, same
-    descent) — tests/test_similarity.py pins indexed ≡ fresh-build
-    results EXACTLY, so any drift between this copy of the beam search
-    and the builder's is caught."""
-
-    def search_shard(vec_pdf, edge_pdf):
-        import heapq
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        ids = vec_pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(vec_pdf["embedding"].to_numpy())[order].astype(
-            np.float64
-        )
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        n = len(ids)
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        FULL_DOT_MAX = 8192  # see _hnsw_candidate_fn (r12 vectorization)
-
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, set]] = [
-            {layer: set() for layer in range(lv + 1)} for lv in level_of
-        ]
-        for node, layer, nb in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj[idx_of[int(node)]][int(layer)].add(idx_of[int(nb)])
-        # sort adjacency ONCE (replaces the per-step sorted() the set
-        # shape paid inside every beam expansion)
-        adj = [
-            {layer: sorted(nbrs) for layer, nbrs in pl.items()} for pl in adj
-        ]
-        # entry = the builder's final entry: highest level, FIRST
-        # inserted among equals (insertion order = ascending vec_id,
-        # and the entry only moves on a STRICTLY higher level)
-        entry, top = None, -1
-        for i in range(n):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        if entry is None:
-            return pd.DataFrame({"query_id": [], "vec_id": []})
-
-        def d_to(qu, i):
-            return round(1.0 - float(unit[i] @ qu), 9)
-
-        def search_layer(qu, dv, eps, ef_, layer):
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nb in adj[c].get(layer, ()):
-                    if nb in visited:
-                        continue
-                    visited.add(nb)
-                    dn = dq(nb)
-                    if len(res) < ef_ or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nb))
-                        heapq.heappush(res, (-dn, nb))
-                        if len(res) > ef_:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
-
-        out_q, out_v = [], []
-        for qid, qvec in queries:
-            qu = np.asarray(qvec, dtype=np.float64)
-            qn = math.sqrt(float(qu @ qu))
-            qu = qu / max(qn, 1e-12)
-            dv = (
-                np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
-                if n <= FULL_DOT_MAX
-                else None
-            )
-            ep = [entry]
-            for layer in range(top, 0, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            res = search_layer(qu, dv, ep, ef + 1, 0)
-            taken = 0
-            for _d, e in res:
-                if int(ids[e]) == qid:
-                    continue
-                out_q.append(qid)
-                out_v.append(int(ids[e]))
-                taken += 1
-                if taken >= k:
-                    break
-        return pd.DataFrame({"query_id": out_q, "vec_id": out_v})
-
-    return search_shard
+    return stage_once(index_dir, tag, build)
 
 
 def knn_hnsw_indexed(
@@ -2342,38 +2154,11 @@ def knn_hnsw_indexed(
     Candidates are re-scored with the exact Catalyst cosine and merged
     as the global top-k, identical to the fresh-build path."""
     index_dir = hnsw_index_write(spark, sf_dir)
-    import os
-
     edges = spark.read.parquet(os.path.join(index_dir, "edges"))
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-    )
-    fn = _hnsw_search_edges_fn(queries, k, ef_search, HNSW_M)
-    cands = (
-        _sharded(corpus)
-        .cogroup(_sharded(edges))
-        .applyInPandas(fn, "query_id bigint, vec_id bigint")
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    return _ranked_topk(sims, k)
+    corpus = emb.withColumn("shard", _shard_of("vec_id"))
+    cands = _served(corpus, edges, _query_vectors(emb), k, ef_search)
+    return _ranked_topk(_rescored(cands, emb), k)
 
 
 def knn_hnsw_indexed_checked(
@@ -2401,264 +2186,38 @@ def knn_hnsw_indexed_checked(
 # node reachable from the entry point, degree bounds intact, and
 # serving recall over the UPDATED graph at the fresh-build floor.
 
-_HNSW_APPEND_DIRS: dict[str, str] = {}
 
-
-def _hnsw_insert_fn(m: int, ef_c: int):
-    """Cogrouped insert body: one shard's vectors (base + new, flagged
-    ``is_new``) + the shard's PERSISTED base edges → the updated full
-    edge set. The base adjacency is RECONSTRUCTED from the edge rows
-    (no base-base distance is ever recomputed); only the inserted
-    nodes run the builder's insert loop — the same rounded distances,
-    deterministic level draw, and overflow pruning as
-    ``_hnsw_candidate_fn`` (tests pin degree bounds + connectivity)."""
-
-    def insert_shard(vec_pdf, edge_pdf):
-        import heapq
-        import math
-        from bisect import bisect_left
-
-        import numpy as np
-        import pandas as pd
-
-        base_pdf = vec_pdf[~vec_pdf["is_new"]]
-        new_pdf = vec_pdf[vec_pdf["is_new"]]
-        base_ids = np.sort(base_pdf["vec_id"].to_numpy())
-        new_ids = np.sort(new_pdf["vec_id"].to_numpy())
-        ids = np.concatenate([base_ids, new_ids])
-        by_id = {
-            int(r.vec_id): r.embedding for r in vec_pdf.itertuples()
-        }
-        vecs = np.stack([np.asarray(by_id[int(v)]) for v in ids]).astype(
-            np.float64
-        )
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        nb, n = len(base_ids), len(ids)
-        FULL_DOT_MAX = 8192  # see _hnsw_candidate_fn (r12 vectorization)
-
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, set]] = [
-            {layer: set() for layer in range(lv + 1)} for lv in level_of
-        ]
-        for node, layer, nbr in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj[idx_of[int(node)]][int(layer)].add(idx_of[int(nbr)])
-        adj = [
-            {layer: sorted(nbrs) for layer, nbrs in pl.items()} for pl in adj
-        ]
-
-        def d_to(qu, i):
-            return round(1.0 - float(unit[i] @ qu), 9)
-
-        def search_layer(qu, dv, eps, ef_, layer):
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nbr in adj[c].get(layer, ()):
-                    if nbr in visited:
-                        continue
-                    visited.add(nbr)
-                    dn = dq(nbr)
-                    if len(res) < ef_ or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nbr))
-                        heapq.heappush(res, (-dn, nbr))
-                        if len(res) > ef_:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
-
-        def _insert_sorted(lst, x):
-            p = bisect_left(lst, x)
-            if p == len(lst) or lst[p] != x:
-                lst.insert(p, x)
-
-        # the persisted entry point: highest level, first-inserted
-        # (lowest base index) among equals — matches the builder
-        entry, top = None, -1
-        for i in range(nb):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        for i in range(nb, n):  # the insert loop, ascending vec_id
-            li = level_of[i]
-            if entry is None:
-                entry, top = i, li
-                continue
-            qu = unit[i]
-            dv = (
-                np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
-                if n <= FULL_DOT_MAX
-                else None
-            )
-            ep = [entry]
-            for layer in range(top, li, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            for layer in range(min(top, li), -1, -1):
-                cands = search_layer(qu, dv, ep, ef_c, layer)
-                mmax = m if layer > 0 else 2 * m
-                for _, e in cands[:m]:
-                    _insert_sorted(adj[i][layer], e)
-                    lst_e = adj[e][layer]
-                    _insert_sorted(lst_e, i)
-                    if len(lst_e) > mmax:
-                        ds = np.round(
-                            1.0 - np.einsum("ij,j->i", unit[lst_e], unit[e]), 9
-                        )
-                        keyed = sorted(zip(ds.tolist(), lst_e))[:mmax]
-                        adj[e][layer] = sorted(x for _, x in keyed)
-                ep = [e for _, e in cands]
-            if li > top:
-                entry, top = i, li
-
-        rows_n, rows_l, rows_nb = [], [], []
-        for i in range(n):
-            for layer, nbrs in adj[i].items():
-                for nbr in nbrs:
-                    rows_n.append(int(ids[i]))
-                    rows_l.append(layer)
-                    rows_nb.append(int(ids[nbr]))
-        return pd.DataFrame(
-            {"node_id": rows_n, "layer": rows_l, "neighbor_id": rows_nb}
-        )
-
-    return insert_shard
-
-
-def _hnsw_graph_stats_fn(m: int):
-    """Cogrouped audit body over (vectors, edge rows): per-shard
-    structural invariants of the UPDATED graph — every node present,
-    every appended node reachable from the entry point (layer-0 BFS;
-    retrievability IS connectivity in a beam-searched graph), and the
-    M-bound held through the append's overflow pruning."""
-
-    def stats(vec_pdf, edge_pdf):
-        import math
-        from collections import deque
-
-        import numpy as np
-        import pandas as pd
-
-        ids = np.sort(vec_pdf["vec_id"].to_numpy())
-        is_new = {
-            int(r.vec_id): bool(r.is_new) for r in vec_pdf.itertuples()
-        }
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        n = len(ids)
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj0: list[set] = [set() for _ in range(n)]
-        deg_viol = 0
-        per_layer: dict[tuple[int, int], int] = {}
-        for node, layer, nbr in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            i, j, la = idx_of[int(node)], idx_of[int(nbr)], int(layer)
-            per_layer[(i, la)] = per_layer.get((i, la), 0) + 1
-            if la == 0:
-                adj0[i].add(j)
-        for (i, la), deg in per_layer.items():
-            if deg > (2 * m if la == 0 else m):
-                deg_viol += 1
-        entry, top = None, -1
-        for i in range(n):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        reach = set()
-        if entry is not None:
-            q = deque([entry])
-            reach.add(entry)
-            while q:
-                c = q.popleft()
-                for nb in adj0[c]:
-                    if nb not in reach:
-                        reach.add(nb)
-                        q.append(nb)
-        n_new = sum(1 for v in ids if is_new[int(v)])
-        new_connected = sum(
-            1 for v in ids if is_new[int(v)] and idx_of[int(v)] in reach
-        )
-        return pd.DataFrame(
-            {
-                "n_vectors": [n],
-                "n_new": [n_new],
-                "n_new_connected": [new_connected],
-                "degree_violations": [deg_viol],
-            }
-        )
-
-    return stats
+def _append_corpus(emb: DataFrame) -> DataFrame:
+    """The corpus with its shard and the nightly-batch flag."""
+    return emb.withColumn("shard", _shard_of("vec_id")).withColumn(
+        "is_new", F.col("vec_id") % 10 == 0
+    )
 
 
 def hnsw_append_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the append lifecycle once per process per corpus fingerprint (the
-    delta-stager crash-idempotency discipline): persist the BASE
-    corpus's per-shard edges, then read them BACK from disk and run
-    the insert cogroup for the nightly batch, persisting the updated
-    graph as ``edges_v2`` — the full persisted-index round trip."""
-    import os
-    import shutil
-    import uuid
-
+    """Stage the append lifecycle once per process per corpus
+    fingerprint (``stage_once``): persist the BASE corpus's per-shard
+    edges, then read them BACK from disk and run the insert cogroup
+    for the nightly batch, persisting the updated graph as
+    ``edges_v2`` — the full persisted-index round trip."""
     tag, index_dir = _proc_stage_dir("hnswapp", sf_dir)
-    if tag in _HNSW_APPEND_DIRS:
-        return _HNSW_APPEND_DIRS[tag]
-    done = os.path.join(index_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(index_dir):
-            shutil.rmtree(index_dir)
-        stage = f"{index_dir}.staging-{uuid.uuid4().hex[:12]}"
-        emb = spread(load_table(spark, sf_dir, "embeddings"))
-        corpus = emb.withColumn(
-            "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-        ).withColumn("is_new", F.col("vec_id") % 10 == 0)
-        base = corpus.filter(~F.col("is_new"))
-        build = _hnsw_candidate_fn(
-            [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
-        )
-        base_edges = _sharded(base).applyInPandas(
-            build, "node_id bigint, layer int, neighbor_id bigint"
-        ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
-        base_edges.write.partitionBy("shard").parquet(
-            os.path.join(stage, "edges_base")
-        )
+
+    def build(stage: str) -> None:
+        corpus = _append_corpus(spread(load_table(spark, sf_dir, "embeddings")))
+        _built_edges(corpus.filter(~F.col("is_new"))).write.partitionBy(
+            "shard"
+        ).parquet(os.path.join(stage, "edges_base"))
         persisted = spark.read.parquet(os.path.join(stage, "edges_base"))
-        ins = _hnsw_insert_fn(HNSW_M, HNSW_EF_CONSTRUCTION)
-        updated = (
+        (
             _sharded(corpus)
             .cogroup(_sharded(persisted))
-            .applyInPandas(ins, "node_id bigint, layer int, neighbor_id bigint")
-            .withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
+            .applyInPandas(_hnsw_insert_fn(HNSW_M, HNSW_EF_CONSTRUCTION), EDGE_SCHEMA)
+            .withColumn("shard", _shard_of("node_id"))
+            .write.partitionBy("shard")
+            .parquet(os.path.join(stage, "edges_v2"))
         )
-        updated.write.partitionBy("shard").parquet(
-            os.path.join(stage, "edges_v2")
-        )
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, index_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _HNSW_APPEND_DIRS[tag] = index_dir
-    return index_dir
+
+    return stage_once(index_dir, tag, build)
 
 
 HNSW_APPEND_RECALL_FLOOR = 0.85  # the fresh-build serving floor
@@ -2671,72 +2230,24 @@ def hnsw_index_append_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern). One unreachable appended vector, one M-bound violation,
     one lost node, or serving recall under the fresh-build floor flips
     a flag and breaks the hash."""
-    import os
-
     index_dir = hnsw_append_stage(spark, sf_dir)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-    ).withColumn("is_new", F.col("vec_id") % 10 == 0)
+    corpus = _append_corpus(emb)
     edges = spark.read.parquet(os.path.join(index_dir, "edges_v2"))
-    stats = (
-        _sharded(corpus)
-        .cogroup(_sharded(edges))
-        .applyInPandas(
-            _hnsw_graph_stats_fn(HNSW_M),
-            "n_vectors bigint, n_new bigint, n_new_connected bigint, "
-            "degree_violations bigint",
-        )
-        .agg(
-            F.sum("n_vectors").cast("bigint").alias("nodes_indexed"),
-            F.sum("n_new").cast("bigint").alias("n_batch"),
-            (F.sum("n_new") == F.sum("n_new_connected")).alias(
-                "appended_connected"
-            ),
-            (F.sum("degree_violations") == 0).alias("degree_bounded"),
-        )
+    stats = _graph_stats(corpus, edges).agg(
+        F.sum("n_vectors").cast("bigint").alias("nodes_indexed"),
+        F.sum("n_new").cast("bigint").alias("n_batch"),
+        (F.sum("n_new") == F.sum("n_new_connected")).alias("appended_connected"),
+        (F.sum("degree_violations") == 0).alias("degree_bounded"),
     )
     # serving recall over the UPDATED persisted graph, vs the exact
     # top-k of the FULL corpus (base + appended)
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
-    fn = _hnsw_search_edges_fn(queries, TOP_K, HNSW_EF_SEARCH, HNSW_M)
-    cands = (
-        _sharded(corpus.drop("is_new"))
-        .cogroup(_sharded(edges))
-        .applyInPandas(fn, "query_id bigint, vec_id bigint")
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        cands.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    approx = _ranked_topk(sims, TOP_K).select("query_id", "vec_id")
+    cands = _served(corpus.drop("is_new"), edges, _query_vectors(emb))
+    approx = _ranked_topk(_rescored(cands, emb), TOP_K).select("query_id", "vec_id")
     true_k = _ranked_topk(_all_sims(spark, sf_dir), TOP_K).select(
         "query_id", "vec_id"
     )
-    recall = (
-        approx.join(true_k, ["query_id", "vec_id"], "inner")
-        .agg(F.count("*").alias("hits"))
-        .crossJoin(true_k.agg(F.count("*").alias("total")))
-        .select(
-            (
-                F.col("hits")
-                >= F.lit(HNSW_APPEND_RECALL_FLOOR) * F.col("total")
-            ).alias("recall_floor_met")
-        )
-    )
+    recall = _recall_floor_met(approx, true_k)
     truth = emb.agg(F.count("*").cast("bigint").alias("n_corpus"))
     return (
         stats.crossJoin(F.broadcast(truth))
@@ -2769,197 +2280,6 @@ FROM embeddings
 # -- round 11: HNSW delete maintenance (tombstone -> compact) -----------
 
 HNSW_TOMBSTONE_COMPACT = 0.05  # compact a shard past this deleted fraction
-_HNSW_DELETE_DIRS: dict[str, str] = {}
-
-
-def _hnsw_search_excluding_fn(
-    queries: list, k: int, ef: int, m: int, excluded: frozenset
-):
-    """The persisted-graph beam search with a TOMBSTONE set: traversal
-    runs THROUGH tombstoned nodes (they are still edges in the graph —
-    removing them from the descent would strand their neighborhoods)
-    but an excluded id is never EMITTED. This is the serve-side
-    semantics between a delete and the compaction that physically
-    removes the node."""
-
-    def search_shard(vec_pdf, edge_pdf):
-        import heapq
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        ids = vec_pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(vec_pdf["embedding"].to_numpy())[order].astype(
-            np.float64
-        )
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        n = len(ids)
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        m_l = 1.0 / math.log(m)
-        level_of = []
-        for vid in ids:
-            h = (int(vid) * 2654435761 + 97) % (1 << 32)
-            u = (h + 1) / float((1 << 32) + 1)
-            level_of.append(min(int(-math.log(u) * m_l), 8))
-        adj: list[dict[int, set]] = [
-            {layer: set() for layer in range(lv + 1)} for lv in level_of
-        ]
-        for node, layer, nb in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj[idx_of[int(node)]][int(layer)].add(idx_of[int(nb)])
-        adj = [
-            {layer: sorted(nbrs) for layer, nbrs in pl.items()} for pl in adj
-        ]
-        entry, top = None, -1
-        for i in range(n):
-            if level_of[i] > top:
-                entry, top = i, level_of[i]
-        if entry is None:
-            return pd.DataFrame({"query_id": [], "vec_id": []})
-        FULL_DOT_MAX = 8192  # see _hnsw_candidate_fn (r12 vectorization)
-
-        def d_to(qu, i):
-            return round(1.0 - float(unit[i] @ qu), 9)
-
-        def search_layer(qu, dv, eps, ef_, layer):
-            dq = dv.__getitem__ if dv is not None else (lambda x: d_to(qu, x))
-            visited = set(eps)
-            cand = [(dq(e), e) for e in eps]
-            heapq.heapify(cand)
-            res = [(-d, e) for d, e in cand]
-            heapq.heapify(res)
-            while cand:
-                d, c = heapq.heappop(cand)
-                if res and d > -res[0][0]:
-                    break
-                for nb in adj[c].get(layer, ()):
-                    if nb in visited:
-                        continue
-                    visited.add(nb)
-                    dn = dq(nb)
-                    if len(res) < ef_ or dn < -res[0][0]:
-                        heapq.heappush(cand, (dn, nb))
-                        heapq.heappush(res, (-dn, nb))
-                        if len(res) > ef_:
-                            heapq.heappop(res)
-            return sorted(((-d, e) for d, e in res), key=lambda t: (t[0], t[1]))
-
-        out_q, out_v = [], []
-        for qid, qvec in queries:
-            qu = np.asarray(qvec, dtype=np.float64)
-            qn = math.sqrt(float(qu @ qu))
-            qu = qu / max(qn, 1e-12)
-            dv = (
-                np.round(1.0 - np.einsum("ij,j->i", unit, qu), 9).tolist()
-                if n <= FULL_DOT_MAX
-                else None
-            )
-            ep = [entry]
-            for layer in range(top, 0, -1):
-                ep = [search_layer(qu, dv, ep, 1, layer)[0][1]]
-            res = search_layer(qu, dv, ep, ef + 1, 0)
-            taken = 0
-            for _d, e in res:
-                vid = int(ids[e])
-                if vid == qid or vid in excluded:
-                    continue  # tombstones traversed, never returned
-                out_q.append(qid)
-                out_v.append(vid)
-                taken += 1
-                if taken >= k:
-                    break
-        return pd.DataFrame({"query_id": out_q, "vec_id": out_v})
-
-    return search_shard
-
-
-def _hnsw_compact_fn(m: int):
-    """Cogrouped compaction body: one shard's vectors (flagged
-    ``is_deleted``) + its edge rows → the repaired SURVIVOR-ONLY edge
-    set. For every deleted node d at every layer, d's surviving
-    neighbors are re-linked pairwise (the standard one-hop repair:
-    the hole d leaves is bridged by its own neighborhood), then every
-    survivor's list drops deleted targets and re-prunes to the M
-    bound by the builder's rule (closest first, rounded distance,
-    tie on id) — so the output graph is self-contained (zero edges
-    into deleted nodes) and degree-bounded."""
-
-    def compact_shard(vec_pdf, edge_pdf):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        ids = vec_pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vecs = np.stack(vec_pdf["embedding"].to_numpy())[order].astype(
-            np.float64
-        )
-        deleted_flags = vec_pdf["is_deleted"].to_numpy()[order]
-        norms = np.sqrt((vecs * vecs).sum(axis=1))
-        unit = vecs / np.maximum(norms, 1e-12)[:, None]
-        idx_of = {int(v): i for i, v in enumerate(ids)}
-        is_del = [bool(x) for x in deleted_flags]
-
-        adj: dict[int, dict[int, set]] = {}
-        for node, layer, nb in zip(
-            edge_pdf["node_id"], edge_pdf["layer"], edge_pdf["neighbor_id"]
-        ):
-            adj.setdefault(idx_of[int(node)], {}).setdefault(
-                int(layer), set()
-            ).add(idx_of[int(nb)])
-
-        layers = sorted({la for pl in adj.values() for la in pl})
-        for la in layers:
-            # bridge every deleted node's surviving neighborhood
-            for d, pl in adj.items():
-                if not is_del[d] or la not in pl:
-                    continue
-                surv = sorted(u for u in pl[la] if not is_del[u])
-                for a in surv:
-                    for b in surv:
-                        if a != b:
-                            adj.setdefault(a, {}).setdefault(la, set()).add(b)
-                            adj.setdefault(b, {}).setdefault(la, set()).add(a)
-            # drop deleted targets, re-prune to the M bound
-            mmax = 2 * m if la == 0 else m
-            for u, pl in adj.items():
-                if is_del[u] or la not in pl:
-                    continue
-                keep = {x for x in pl[la] if not is_del[x]}
-                if len(keep) > mmax:
-                    # r12: one einsum for the prune batch instead of a
-                    # numpy dot per key call (rounded values pinned
-                    # equal to the scalar path by test)
-                    klist = sorted(keep)
-                    ds = np.round(
-                        1.0 - np.einsum("ij,j->i", unit[klist], unit[u]), 9
-                    )
-                    keep = set(
-                        x for _, x in sorted(zip(ds.tolist(), klist))[:mmax]
-                    )
-                pl[la] = keep
-
-        rows_n, rows_l, rows_nb = [], [], []
-        for u in sorted(adj):
-            if is_del[u]:
-                continue
-            for la, nbrs in adj[u].items():
-                for nb in sorted(nbrs):
-                    rows_n.append(int(ids[u]))
-                    rows_l.append(la)
-                    rows_nb.append(int(ids[nb]))
-        return pd.DataFrame(
-            {"node_id": rows_n, "layer": rows_l, "neighbor_id": rows_nb}
-        )
-
-    return compact_shard
 
 
 def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
@@ -2976,30 +2296,12 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
       ``edges_compacted``; a below-threshold shard would keep its
       base edges (the per-shard decision is written to
       ``compaction.json``)."""
-    import json as _json
-    import os
-    import shutil
-    import uuid
-
     tag, index_dir = _proc_stage_dir("hnswdel", sf_dir)
-    if tag in _HNSW_DELETE_DIRS:
-        return _HNSW_DELETE_DIRS[tag]
-    done = os.path.join(index_dir, "_staging_complete")
-    if not os.path.exists(done):
-        if os.path.exists(index_dir):
-            shutil.rmtree(index_dir)
-        stage = f"{index_dir}.staging-{uuid.uuid4().hex[:12]}"
+
+    def build(stage: str) -> None:
         emb = spread(load_table(spark, sf_dir, "embeddings"))
-        corpus = emb.withColumn(
-            "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-        )
-        build = _hnsw_candidate_fn(
-            [], 0, (), HNSW_M, HNSW_EF_CONSTRUCTION, emit="edges"
-        )
-        base_edges = _sharded(corpus).applyInPandas(
-            build, "node_id bigint, layer int, neighbor_id bigint"
-        ).withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
-        base_edges.write.partitionBy("shard").parquet(
+        corpus = emb.withColumn("shard", _shard_of("vec_id"))
+        _built_edges(corpus).write.partitionBy("shard").parquet(
             os.path.join(stage, "edges_base")
         )
         for name, modulus in (("tombstones_v1", 34), ("tombstones_v2", 17)):
@@ -3023,7 +2325,7 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
             if frac > HNSW_TOMBSTONE_COMPACT
         )
         with open(os.path.join(stage, "compaction.json"), "w") as f:
-            _json.dump(
+            json.dump(
                 {"fractions": fractions, "compacted": compact_shards}, f,
                 sort_keys=True,
             )
@@ -3039,11 +2341,8 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
                     F.col("shard").isin(compact_shards)
                 ))
             )
-            .applyInPandas(
-                _hnsw_compact_fn(HNSW_M),
-                "node_id bigint, layer int, neighbor_id bigint",
-            )
-            .withColumn("shard", (F.col("node_id") % HNSW_SHARDS).cast("int"))
+            .applyInPandas(_hnsw_compact_fn(HNSW_M), EDGE_SCHEMA)
+            .withColumn("shard", _shard_of("node_id"))
         )
         kept = persisted.filter(~F.col("shard").isin(compact_shards)).select(
             "node_id", "layer", "neighbor_id", "shard"
@@ -3051,16 +2350,8 @@ def hnsw_delete_stage(spark: SparkSession, sf_dir: str) -> str:
         compacted.unionByName(kept).write.partitionBy("shard").parquet(
             os.path.join(stage, "edges_compacted")
         )
-        with open(os.path.join(stage, "_staging_complete"), "w") as f:
-            f.write(tag)
-        try:
-            os.rename(stage, index_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-    _HNSW_DELETE_DIRS[tag] = index_dir
-    return index_dir
+
+    return stage_once(index_dir, tag, build)
 
 
 def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3081,22 +2372,12 @@ def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``deleted_never_returned`` + ``recall_floor_met``: serving the
       compacted graph returns no deleted id and keeps recall over the
       SURVIVOR exact top-k at the 0.85 floor."""
-    import json as _json
-    import os
-
     index_dir = hnsw_delete_stage(spark, sf_dir)
     with open(os.path.join(index_dir, "compaction.json")) as f:
-        decision = _json.load(f)
+        decision = json.load(f)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    corpus = emb.withColumn(
-        "shard", (F.col("vec_id") % HNSW_SHARDS).cast("int")
-    )
-    queries = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded: the N_QUERIES demo query vectors
-    ]
+    corpus = emb.withColumn("shard", _shard_of("vec_id"))
+    queries = _query_vectors(emb)
     v1_ids = frozenset(
         int(r.vec_id)
         for r in spark.read.parquet(
@@ -3105,23 +2386,14 @@ def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         # production keeps this as a broadcast join, not a driver set
     )
     base_edges = spark.read.parquet(os.path.join(index_dir, "edges_base"))
-    serve_v1 = (
-        _sharded(corpus)
-        .cogroup(_sharded(base_edges))
-        .applyInPandas(
-            _hnsw_search_excluding_fn(
-                queries, TOP_K, HNSW_EF_SEARCH, HNSW_M, v1_ids
-            ),
-            "query_id bigint, vec_id bigint",
-        )
-    )
+    serve_v1 = _served(corpus, base_edges, queries, excluded=v1_ids)
     v1_clean = serve_v1.agg(
         (
             F.sum((F.col("vec_id") % 34 == 3).cast("int")) == 0
         ).alias("tombstone_serve_clean")
     )
-    # post-compaction: survivors only, the STANDARD search fn — a
-    # single dangling edge into a deleted node would KeyError the scan
+    # post-compaction: survivors only, no exclusion set — a single
+    # dangling edge into a deleted node would KeyError the scan
     survivors = corpus.filter(F.col("vec_id") % 17 != 3)
     cedges = spark.read.parquet(os.path.join(index_dir, "edges_compacted"))
     deleted = corpus.filter(F.col("vec_id") % 17 == 3).select(
@@ -3139,66 +2411,25 @@ def hnsw_index_delete_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reachability + degree via the append audit body: flagging every
     # survivor "new" makes its new-connected count a full layer-0 BFS
     # coverage check of the compacted graph
-    reach = (
-        _sharded(survivors.withColumn("is_new", F.lit(True)))
-        .cogroup(_sharded(cedges))
-        .applyInPandas(
-            _hnsw_graph_stats_fn(HNSW_M),
-            "n_vectors bigint, n_new bigint, n_new_connected bigint, "
-            "degree_violations bigint",
-        )
-        .agg(
-            (F.sum("n_new") == F.sum("n_new_connected")).alias(
-                "survivors_reachable"
-            ),
-            (F.sum("degree_violations") == 0).alias("degree_bounded"),
-            F.sum("n_vectors").cast("bigint").alias("n_survivor_nodes"),
-        )
+    reach = _graph_stats(survivors.withColumn("is_new", F.lit(True)), cedges).agg(
+        (F.sum("n_new") == F.sum("n_new_connected")).alias("survivors_reachable"),
+        (F.sum("degree_violations") == 0).alias("degree_bounded"),
+        F.sum("n_vectors").cast("bigint").alias("n_survivor_nodes"),
     )
-    serve_v2 = (
-        _sharded(survivors)
-        .cogroup(_sharded(cedges))
-        .applyInPandas(
-            _hnsw_search_edges_fn(queries, TOP_K, HNSW_EF_SEARCH, HNSW_M),
-            "query_id bigint, vec_id bigint",
-        )
-        # two consumers (the deleted-id flag and the recall sims) —
-        # materialize the ≤ n_queries×k candidate rows once so the
-        # survivor beam-search cogroup runs once, not twice (r11)
-        .localCheckpoint()
-    )
+    # two consumers (the deleted-id flag and the recall sims) —
+    # materialize the ≤ n_queries×k candidate rows once so the
+    # survivor beam-search cogroup runs once, not twice (r11)
+    serve_v2 = _served(survivors, cedges, queries).localCheckpoint()
     clean_v2 = serve_v2.agg(
         (F.sum((F.col("vec_id") % 17 == 3).cast("int")) == 0).alias(
             "deleted_never_returned"
         )
     )
-    qdf = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    sims = (
-        serve_v2.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            round2(cosine_similarity("q", "embedding"), 6).alias("sim"),
-        )
-    )
-    approx = _ranked_topk(sims, TOP_K).select("query_id", "vec_id")
+    approx = _ranked_topk(_rescored(serve_v2, emb), TOP_K).select("query_id", "vec_id")
     true_k = _ranked_topk(
         _all_sims(spark, sf_dir).filter(F.col("vec_id") % 17 != 3), TOP_K
     ).select("query_id", "vec_id")
-    recall = (
-        approx.join(true_k, ["query_id", "vec_id"], "inner")
-        .agg(F.count("*").alias("hits"))
-        .crossJoin(true_k.agg(F.count("*").alias("total")))
-        .select(
-            (
-                F.col("hits")
-                >= F.lit(HNSW_APPEND_RECALL_FLOOR) * F.col("total")
-            ).alias("recall_floor_met")
-        )
-    )
+    recall = _recall_floor_met(approx, true_k)
     counts = emb.agg(
         F.count("*").cast("bigint").alias("n_corpus"),
         F.sum((F.col("vec_id") % 17 == 3).cast("int"))

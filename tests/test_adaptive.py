@@ -12,8 +12,6 @@ configuration.
 from __future__ import annotations
 
 import contextlib
-import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,7 +60,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
     assert "isSkew=true" in plan or "skew=true" in plan, plan
 
 
-def test_dynamic_partition_pruning_on_hive_layout(spark, sf_dir):
+def test_dynamic_partition_pruning_on_hive_layout(spark, sf_dir, tmp_path):
     """Joining a hive-partitioned fact on its partition key against a
     selectively filtered dim must inject a runtime pruning subquery
     (``dynamicpruning``) so only matching partitions are scanned."""
@@ -72,7 +70,7 @@ def test_dynamic_partition_pruning_on_hive_layout(spark, sf_dir):
     from real_time_big_data_analytics_spark.sources.tables import load_table
 
     events = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="rtba_dpp_") + "/events_" + uuid.uuid4().hex[:8]
+    out = str(tmp_path / "events")
     write_partitioned_parquet(events, out, partition_by=["event_type"])
 
     fact = spark.read.parquet(out)

@@ -140,7 +140,6 @@ def test_staging_recovers_from_partial_build(spark):
     # simulate the crash: completion marker absent, earlier state present
     os.remove(os.path.join(table_dir, "_staging_complete"))
     os.remove(D._commit_path(table_dir, 2))
-    D._DELTA_DIRS.clear()
     rebuilt = D.stage_events_as_delta(spark, sf)
     assert rebuilt == table_dir
     assert os.path.exists(D._commit_path(rebuilt, 2))

@@ -8,7 +8,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from real_time_big_data_analytics_spark.functions.numeric import round2
+from real_time_big_data_analytics_spark.functions.numeric import round2, round_half_up
 
 # Exact-tie values where Spark's BigDecimal HALF_UP and C-style binary
 # rounding disagree, plus sign/magnitude edges.
@@ -49,12 +49,17 @@ def test_round2_matches_duckdb_bitwise(spark):
     con.register("t", pdf)
     want = con.execute("SELECT round(x, 2) AS r FROM t").df()["r"].to_numpy()
 
+    # the driver-side Python twin, pinned to the same DuckDB values
+    twin = np.array([round_half_up(float(x), 2) for x in pdf["x"]])
+
     # bit-identical up to the sign of zero (-0.0 == 0.0 everywhere a
     # result is consumed; normalize with +0.0)
-    got_n, want_n = got + 0.0, want + 0.0
-    assert np.array_equal(
-        got_n.view("int64"), want_n.view("int64")
-    ), f"mismatches at {np.nonzero(got_n.view('int64') != want_n.view('int64'))[0][:5]}"
+    want_n = want + 0.0
+    for name, vals in (("round2", got), ("round_half_up", twin)):
+        got_n = vals + 0.0
+        assert np.array_equal(
+            got_n.view("int64"), want_n.view("int64")
+        ), f"{name} mismatches at {np.nonzero(got_n.view('int64') != want_n.view('int64'))[0][:5]}"
 
 
 def test_round2_scale_param(spark):

@@ -56,13 +56,11 @@ def test_stream_scoring_counts_total(spark, sf_dir):
     assert sum(r.n_events for r in out) > 0
 
 
-def test_processing_time_trigger_with_rate_source(spark):
+def test_processing_time_trigger_with_rate_source(spark, tmp_path):
     """T1/S1 — the production trigger shape: a live unbounded source
     (rate — the Twitter-receiver substitute, SURVEY.md §2.1 S1) with a
     processingTime trigger, windowed count into a memory sink. Proves
     the continuous path works, not just availableNow replay."""
-    import os
-    import tempfile
     import time
     import uuid
 
@@ -80,10 +78,7 @@ def test_processing_time_trigger_with_rate_source(spark):
         stream.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.mkdtemp(prefix="rtba_rate_"), name),
-        )
+        .option("checkpointLocation", str(tmp_path / name))
         .trigger(processingTime="250 milliseconds")
         .start()
     )
