@@ -10,7 +10,6 @@ from __future__ import annotations
 import functools
 import os
 import sys
-import tempfile
 import zipfile
 from collections.abc import Callable
 
@@ -20,6 +19,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
 from real_time_big_data_analytics_spark.registry import all_queries
+from real_time_big_data_analytics_spark.streaming.runner import _session_tmpdir
 
 _FLAGSHIP = "flagship_windowed_analytics"
 _PKG = "real_time_big_data_analytics_spark"
@@ -45,13 +45,14 @@ def _ship_package(spark: SparkSession) -> None:
     and executor workers don't inherit the driver's sys.path hack
     above. Zipping the package once per SparkContext and shipping it
     via ``addPyFile`` fixes that for any session the caller hands us.
+    ``addPyFile`` copies the zip, so its dir is removed at exit.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId
     if app_id in _shipped_contexts:
         return
     pkg_dir = os.path.join(_REPO, _PKG)
-    zpath = os.path.join(tempfile.mkdtemp(prefix="rtba_pkg_"), f"{_PKG}.zip")
+    zpath = os.path.join(_session_tmpdir("rtba_pkg_"), f"{_PKG}.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:

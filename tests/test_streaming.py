@@ -238,6 +238,71 @@ def test_checkpoint_recovery_resumes_exactly_once(spark, tmp_path):
     assert got == want
 
 
+def test_index_sink_restart_delivers_each_id_once(spark, tmp_path):
+    """The paper's sink path across a restart: a file stream into
+    ``foreachBatch(index_sink)`` runs to completion, one more file
+    arrives, and the query restarts on the same checkpoint. Batch 0 must
+    not be replayed and batch 1 must carry only the new file."""
+    from real_time_big_data_analytics_spark.streaming.runner import index_sink
+
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+    schema = "id bigint"
+
+    def add_rows(lo, hi):
+        spark.createDataFrame(
+            [(i,) for i in range(lo, hi)], schema
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    def run_once():
+        q = (
+            spark.readStream.schema(schema).parquet(src)
+            .writeStream.foreachBatch(index_sink(sink))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        q.stop()
+
+    add_rows(0, 100)
+    run_once()
+    add_rows(100, 200)
+    run_once()
+
+    rows = spark.read.parquet(sink).collect()
+    assert sorted(r.id for r in rows) == list(range(200))
+    assert {r.id: r._batch_id for r in rows} == {i: i // 100 for i in range(200)}
+
+
+def test_checkpoint_file_manager_is_filesystem_based(spark, tmp_path):
+    """The factory session commits checkpoint files with
+    ``FileSystem.rename`` (no ``readlink`` fork per file on local disk
+    without libhadoop), and the manager still refuses to overwrite an
+    existing batch file: a second non-overwriting ``createAtomic`` of
+    the same path fails and the first file's bytes stay."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    factory = getattr(getattr(pkg, "CheckpointFileManager$"), "MODULE$")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = factory.create(jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hadoop_conf)
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    batch = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = manager.createAtomic(batch, False)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = manager.createAtomic(batch, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="FAILED_RENAME_PATH"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+
 def test_cdc_materialization_independent_of_batch_slicing(spark, sf_dir):
     """The merged serving table must be identical whether the stream
     arrived as one batch or four — the merge is commutative and

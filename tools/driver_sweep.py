@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,11 +35,13 @@ def main() -> int:
     ap.add_argument("names", nargs="*", help="subset of queries() to replay")
     args = ap.parse_args()
 
+    sys.path.insert(0, REPO)
+    from real_time_big_data_analytics_spark.streaming.runner import _session_tmpdir
+
     # Foreign cwd FIRST, before any Spark context exists, so executor
     # python workers inherit a directory the package is NOT importable
     # from — the exact failure surface the driver exposes.
-    os.chdir(tempfile.mkdtemp(prefix="rtba_driver_sweep_"))
-    sys.path.insert(0, REPO)
+    os.chdir(_session_tmpdir("rtba_driver_sweep_"))
 
     from pyspark.sql import SparkSession
 
