@@ -4315,12 +4315,12 @@ def _avro_schema_evolution_read(spark, sf_dir):
     renamed/promoted columns, so a mis-skipped field (which would
     shear the whole byte stream), a wrong alias, a lost default, or a
     broken promotion diverges."""
-    import json
     import os
 
     from pyspark.sql import functions as F
 
-    from .sources.pyds import _repo_root, stage_events_as_avro
+    from .sources import avro_ocf
+    from .sources.pyds import stage_events_as_avro
 
     out_dir = stage_events_as_avro(spark, sf_dir)
     files = sorted(
@@ -4340,23 +4340,13 @@ def _avro_schema_evolution_read(spark, sf_dir):
             {"name": "source", "type": "string", "default": "legacy"},
         ],
     }
-    rs_json = json.dumps(reader_schema)
-    pkg = _repo_root()
 
     def read_resolved(batches):
-        import json as _j
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
         import pandas as pd
 
-        from real_time_big_data_analytics_spark.sources import avro_ocf
-
-        rs = _j.loads(rs_json)
         for pdf in batches:
             for path in pdf["path"]:
-                rows = list(avro_ocf.read_ocf(path, reader_schema=rs))
+                rows = list(avro_ocf.read_ocf(path, reader_schema=reader_schema))
                 yield pd.DataFrame(
                     {
                         "event_id": [r["event_id"] for r in rows],

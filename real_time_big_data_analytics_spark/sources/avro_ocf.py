@@ -47,9 +47,16 @@ import io
 import json
 import os
 import struct
+import sys
 import zlib
 
+from pyspark import cloudpickle
+
 from . import snappy_codec
+
+# Runs in Spark's Python workers, which cannot import this package:
+# pickled by value, like operators/hnsw.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _zstd_compress(data: bytes) -> bytes:

@@ -41,6 +41,13 @@ from __future__ import annotations
 
 import os
 import struct
+import sys
+
+from pyspark import cloudpickle
+
+# Runs in Spark's Python workers, which cannot import this package:
+# pickled by value, like operators/hnsw.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # --- Z85 (ZeroMQ RFC 32, public) ---------------------------------------
 

@@ -50,9 +50,16 @@ indexed corpus; a real cluster shards it.
 from __future__ import annotations
 
 import json
+import sys
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from pyspark import cloudpickle
+
+# Runs in Spark's Python workers, which cannot import this package:
+# pickled by value, like operators/hnsw.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # ------------------------------------------------------------ murmur3
 

@@ -58,7 +58,16 @@ import os
 import socket
 import socketserver
 import struct
+import sys
 import threading
+
+from pyspark import cloudpickle
+
+from . import snappy_codec
+
+# Runs in Spark's Python workers, which cannot import this package:
+# pickled by value, like operators/hnsw.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # ---------------------------------------------------------------- CRC32C
 
@@ -216,8 +225,6 @@ def encode_record_batch(
         # avro deflate path)
         payload = gzip.compress(payload, mtime=0)
     elif codec == CODEC_SNAPPY:
-        from . import snappy_codec
-
         # the xerial stream framing the Java client writes (and the
         # deterministic own-compressor keeps batches byte-reproducible)
         payload = snappy_codec.xerial_frame(payload)
@@ -283,8 +290,6 @@ def decode_record_batch(buf: bytes) -> list[tuple[bytes | None, bytes]]:
             raise ValueError(f"gzip records section malformed: {e}") from e
         after_crc = after_crc[:40] + records_section
     elif codec == CODEC_SNAPPY:
-        from . import snappy_codec
-
         # accept both public payload shapes: the xerial stream (Java
         # clients) and a bare raw block (librdkafka) — magic-sniffed
         records_section = snappy_codec.maybe_xerial_unframe(

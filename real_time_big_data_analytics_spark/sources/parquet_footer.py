@@ -38,6 +38,13 @@ from __future__ import annotations
 
 import io
 import struct
+import sys
+
+from pyspark import cloudpickle
+
+# Runs in Spark's Python workers, which cannot import this package:
+# pickled by value, like operators/hnsw.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MAGIC = b"PAR1"
 
@@ -437,9 +444,6 @@ def footer_column_stats(spark, sf_dir: str, tables=("events", "documents")):
     import pandas as pd  # noqa: F401  (mapInPandas contract)
     from pyspark.sql import functions as F
 
-    pkg = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     paths = []
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -456,15 +460,7 @@ def footer_column_stats(spark, sf_dir: str, tables=("events", "documents")):
     )
 
     def parse(iterator):
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
         import pandas as pd
-
-        from real_time_big_data_analytics_spark.sources.parquet_footer import (
-            read_footer,
-        )
 
         cols = [
             "col_name",
@@ -655,9 +651,6 @@ def page_index_stats(spark, sf_dir: str):
 
     from ..functions.numeric import round2
 
-    pkg = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     data_dir = os.path.join(
         stage_events_page_indexed(spark, sf_dir), "data"
     )
@@ -672,17 +665,8 @@ def page_index_stats(spark, sf_dir: str):
     audit_cols = PAGE_INDEX_COLS
 
     def parse(iterator):
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
         import pandas as pd
         import pyarrow.parquet as papq
-
-        from real_time_big_data_analytics_spark.sources.parquet_footer import (
-            page_prune_ranges,
-            read_page_index,
-        )
 
         for pdf in iterator:
             rows = []
@@ -1098,9 +1082,6 @@ def bloom_probe_stats(spark, sf_dir: str):
 
     from pyspark.sql import functions as F
 
-    pkg = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     base = stage_events_bloom_indexed(spark, sf_dir)
     paths = []
     for split in sorted(os.listdir(base)):
@@ -1120,17 +1101,8 @@ def bloom_probe_stats(spark, sf_dir: str):
     absent_base = _BLOOM_ABSENT_BASE
 
     def parse(iterator):
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
         import pandas as pd
         import pyarrow.parquet as papq
-
-        from real_time_big_data_analytics_spark.sources.parquet_footer import (
-            bloom_might_contain,
-            read_bloom_filters,
-        )
 
         for pdf in iterator:
             rows = []

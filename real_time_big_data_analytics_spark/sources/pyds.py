@@ -14,35 +14,156 @@ Scale notes:
   N shards fans out to N parallel tasks exactly like a native scan.
 - ``read()`` yields ``pyarrow.RecordBatch`` objects; the worker ships
   them to the JVM over Arrow IPC (the same fast path Pandas UDFs use).
-- The class closes over NOTHING from this package (self-contained
-  imports inside methods): executors can unpickle it even when the
-  driver ran from a foreign cwd — the cloudpickle by-reference trap
-  documented in the verify recipe.
 """
 
 from __future__ import annotations
 
+import http.client
+import json
+import os
+import socket
+import struct
+import sys
+
+import pyarrow as pa
+from pyspark import TaskContext, cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamWriter,
     DataSourceWriter,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
     InputPartition,
+    IsNotNull,
+    LessThan,
+    LessThanOrEqual,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
+from . import avro_ocf
+from . import es_wire as ew
+from . import kafka_wire as kw
+
+# The classes and task bodies here run in Spark's Python workers and in
+# the streaming-source runner, which cannot import this package: pickled
+# by value, like operators/hnsw.py. Only the driver-side staging
+# functions import the rest of the package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
 DOCS_SUBSET_SCHEMA = "doc_id bigint, lang string, n_chars bigint"
 
 
-class _JsonlCommit(WriterCommitMessage):
+# ---------------------------------------------------------------------
+# File-backed sources and sinks: one task per part file on read; on
+# write each task writes a TEMP file and returns a commit message, and
+# only the driver-side ``commit()`` publishes (atomic rename) — so failed
+# or speculative task attempts never leave partial output visible, the
+# same task-commit protocol native file sinks use. Local-fs paths match
+# the harness; at production scale the same protocol targets shared
+# storage.
+
+
+class _FilePartition(InputPartition):
+    def __init__(self, path: str):
+        self.path = path
+
+
+class _FileCommit(WriterCommitMessage):
     def __init__(self, path: str, n: int):
         self.path = path
         self.n = n
 
 
-class _JsonlPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+def _part_files(d: str, suffixes: tuple[str, ...]) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for f in sorted(os.listdir(d))
+        if f.endswith(suffixes) and not f.startswith("_tmp_")
+    ]
+
+
+def _open_out_dir(d: str, suffix: str, overwrite: bool) -> None:
+    os.makedirs(d, exist_ok=True)
+    if overwrite:
+        for f in os.listdir(d):
+            if f.endswith(suffix) or f == "_SUCCESS":
+                os.remove(os.path.join(d, f))
+
+
+class _RenameCommitWriter(DataSourceWriter):
+    """Task-commit writer: ``write`` fills ``_tmp_path(suffix)`` and
+    returns a ``_FileCommit``; ``commit`` renames every part into place
+    and writes ``_SUCCESS`` with the row total."""
+
+    def __init__(self, options):
+        self.dir = options["path"]
+
+    def _tmp_path(self, suffix: str) -> str:
+        pid = TaskContext.get().partitionId()
+        return os.path.join(self.dir, f"_tmp_part-{pid:05d}{suffix}")
+
+    def commit(self, messages):
+        for m in messages:
+            os.replace(m.path, m.path.replace("_tmp_part-", "part-"))
+        with open(os.path.join(self.dir, "_SUCCESS"), "w") as f:
+            f.write(str(sum(m.n for m in messages)))
+
+    def abort(self, messages):
+        for m in messages:
+            try:
+                os.remove(m.path)
+            except OSError:
+                pass
+
+
+class _FileLogStreamReader(SimpleDataSourceStreamReader):
+    """Offset-managed reads of a directory of part files, one file per
+    micro-batch. Offsets are ``{"idx": n}``: files are the replayable
+    log, so recovery re-reads from the committed index like a Kafka
+    offset seek.
+
+    The simple-reader API is driver-prefetched rows (right for
+    harness-sized shards and for demonstrating offset/commit
+    semantics); the partition-planned ``DataSourceStreamReader`` is the
+    fan-out path at production scale, exactly like the batch
+    ``partitions()``."""
+
+    suffixes: tuple[str, ...] = ()
+
+    def __init__(self, options):
+        self.dir = options["path"]
+
+    def _rows(self, path: str) -> list[tuple]:
+        raise NotImplementedError
+
+    def initialOffset(self):
+        return {"idx": 0}
+
+    def read(self, start):
+        i = start["idx"]
+        files = _part_files(self.dir, self.suffixes)
+        if i >= len(files):
+            return iter([]), {"idx": i}
+        return iter(self._rows(files[i])), {"idx": i + 1}
+
+    def readBetweenOffsets(self, start, end):
+        rows, _ = self.read(start)
+        return rows
+
+    def commit(self, end):
+        pass
+
+
+# ---------------------------------------------------------------------
+# JSONL documents: a partitioned, Arrow-batched reader, the matching
+# batch writer, and the streaming twin.
+
+_JSONL_SUFFIXES = (".json", ".jsonl")
+_DOCS_COLS = ["doc_id", "lang", "n_chars"]
 
 
 class _JsonlDocsReader(DataSourceReader):
@@ -50,78 +171,28 @@ class _JsonlDocsReader(DataSourceReader):
         self.dir = options["path"]
 
     def partitions(self):
-        import os
-
-        return [
-            _JsonlPartition(os.path.join(self.dir, f))
-            for f in sorted(os.listdir(self.dir))
-            if f.endswith(".json") or f.endswith(".jsonl")
-        ]
+        return [_FilePartition(p) for p in _part_files(self.dir, _JSONL_SUFFIXES)]
 
     def read(self, partition):
         import pyarrow.json as pj
 
-        tbl = pj.read_json(partition.path)
-        tbl = tbl.select(["doc_id", "lang", "n_chars"])
-        for batch in tbl.to_batches():
-            yield batch
+        yield from pj.read_json(partition.path).select(_DOCS_COLS).to_batches()
 
 
-class _JsonlDocsWriter(DataSourceWriter):
-    """Batch write path: each task writes its partition to a TEMP
-    file and returns a commit message; only the driver-side
-    ``commit()`` publishes (atomic rename) — so failed or speculative
-    task attempts never leave partial output visible, the same
-    task-commit protocol native file sinks use. Local-fs paths match
-    the reader's harness assumption; at production scale the same
-    protocol targets shared storage."""
-
-    def __init__(self, options):
-        self.dir = options["path"]
-
+class _JsonlDocsWriter(_RenameCommitWriter):
     def write(self, iterator):
-        import json
-        import os
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        tmp = os.path.join(self.dir, f"_tmp_part-{pid:05d}.jsonl")
+        tmp = self._tmp_path(".jsonl")
         n = 0
         with open(tmp, "w") as f:
             for row in iterator:
                 f.write(
                     json.dumps(
-                        {
-                            "doc_id": row.doc_id,
-                            "lang": row.lang,
-                            "n_chars": row.n_chars,
-                        }
+                        {"doc_id": row.doc_id, "lang": row.lang, "n_chars": row.n_chars}
                     )
                     + "\n"
                 )
                 n += 1
-        return _JsonlCommit(tmp, n)
-
-    def commit(self, messages):
-        import os
-
-        for m in messages:
-            os.replace(
-                m.path,
-                m.path.replace("_tmp_part-", "part-"),
-            )
-        with open(os.path.join(self.dir, "_SUCCESS"), "w") as f:
-            f.write(str(sum(m.n for m in messages)))
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            try:
-                os.remove(m.path)
-            except OSError:
-                pass
+        return _FileCommit(tmp, n)
 
 
 class JsonlDocsDataSource(DataSource):
@@ -141,15 +212,33 @@ class JsonlDocsDataSource(DataSource):
         return _JsonlDocsReader(self.options)
 
     def writer(self, schema, overwrite):
-        import os
-
-        d = self.options["path"]
-        os.makedirs(d, exist_ok=True)
-        if overwrite:
-            for f in os.listdir(d):
-                if f.endswith(".jsonl") or f == "_SUCCESS":
-                    os.remove(os.path.join(d, f))
+        _open_out_dir(self.options["path"], ".jsonl", overwrite)
         return _JsonlDocsWriter(self.options)
+
+
+class _JsonlDocsStreamReader(_FileLogStreamReader):
+    suffixes = _JSONL_SUFFIXES
+
+    def _rows(self, path):
+        import pyarrow.json as pj
+
+        tbl = pj.read_json(path).select(_DOCS_COLS)
+        return list(zip(*(tbl.column(c).to_pylist() for c in _DOCS_COLS)))
+
+
+class JsonlDocsStreamDataSource(DataSource):
+    """The STREAMING twin of :class:`JsonlDocsDataSource`: the same
+    JSONL shards, one file per micro-batch."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "jsonl_docs_stream"
+
+    def schema(self) -> str:
+        return DOCS_SUBSET_SCHEMA
+
+    def simpleStreamReader(self, schema):
+        return _JsonlDocsStreamReader(self.options)
 
 
 def read_documents_via_python_datasource(spark, jsonl_dir: str):
@@ -158,84 +247,9 @@ def read_documents_via_python_datasource(spark, jsonl_dir: str):
     return spark.read.format("jsonl_docs").option("path", jsonl_dir).load()
 
 
-def make_jsonl_docs_stream_datasource():
-    """Build the STREAMING twin of :class:`JsonlDocsDataSource` —
-    offset-managed reads of the same JSONL shards, one file per
-    micro-batch.
-
-    The classes are defined at FUNCTION scope on purpose: Spark runs
-    streaming-source planning in a dedicated Python runner process
-    (``python_streaming_source_runner``) that unpickles the
-    DataSource; a module-level class pickles BY REFERENCE and that
-    runner — unlike executor workers — does not see the
-    addPyFile-shipped package zip, so it dies with
-    ModuleNotFoundError when the driver runs from a foreign cwd.
-    Function-scope classes are pickled BY VALUE (only pyspark/pyarrow
-    imports remain, which every worker has). Verified under the
-    vanilla-session foreign-cwd sweep.
-
-    The simple-reader API is driver-prefetched rows (right for
-    harness-sized shards and for demonstrating offset/commit
-    semantics); the partition-planned ``DataSourceStreamReader`` is
-    the fan-out path at production scale, exactly like the batch
-    ``partitions()`` above. Offsets are ``{"idx": n}`` — files are
-    the replayable log, so recovery re-reads from the committed index
-    like a Kafka offset seek.
-    """
-
-    class _JsonlDocsStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options):
-            self.dir = options["path"]
-
-        def _files(self):
-            import os
-
-            return [
-                os.path.join(self.dir, f)
-                for f in sorted(os.listdir(self.dir))
-                if f.endswith(".json") or f.endswith(".jsonl")
-            ]
-
-        def initialOffset(self):
-            return {"idx": 0}
-
-        def read(self, start):
-            i = start["idx"]
-            files = self._files()
-            if i >= len(files):
-                return iter([]), {"idx": i}
-            import pyarrow.json as pj
-
-            tbl = pj.read_json(files[i]).select(["doc_id", "lang", "n_chars"])
-            rows = list(
-                zip(*(tbl.column(c).to_pylist() for c in ("doc_id", "lang", "n_chars")))
-            )
-            return iter(rows), {"idx": i + 1}
-
-        def readBetweenOffsets(self, start, end):
-            rows, _ = self.read(start)
-            return rows
-
-        def commit(self, end):
-            pass
-
-    class JsonlDocsStreamDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "jsonl_docs_stream"
-
-        def schema(self) -> str:
-            return "doc_id bigint, lang string, n_chars bigint"
-
-        def simpleStreamReader(self, schema):
-            return _JsonlDocsStreamReader(self.options)
-
-    return JsonlDocsStreamDataSource
-
-
 def stream_documents_via_python_datasource(spark, jsonl_dir: str):
     """Register (idempotent) and open the streaming scan."""
-    spark.dataSource.register(make_jsonl_docs_stream_datasource())
+    spark.dataSource.register(JsonlDocsStreamDataSource)
     return spark.readStream.format("jsonl_docs_stream").option("path", jsonl_dir).load()
 
 
@@ -265,25 +279,89 @@ def write_documents_via_python_datasource(spark, df, out_dir: str):
 # Scale notes: at cluster scale the broker address would be a real
 # Kafka bootstrap and the partition fan-out works unchanged — one
 # fetch task per topic-partition is exactly the kafka connector's
-# planning model. The sys.path option exists because executor workers
-# (and the streaming-source runner process) may not have this package
-# importable when the driver runs from a foreign cwd; a cluster deploy
-# would ship it via --py-files, which lands on sys.path the same way.
-
-
-def _repo_root() -> str:
-    """Path that makes this package importable when inserted into
-    sys.path — works both for a checkout (directory) and for the
-    addPyFile-shipped zip (zipimport path)."""
-    import os
-
-    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+# planning model.
 
 _WIRE_BROKERS: dict[str, str] = {}
 
 WIRE_TOPIC = "events"
 WIRE_NPARTS = 8
+_WIRE_CODECS = {
+    "none": kw.CODEC_NONE,
+    "gzip": kw.CODEC_GZIP,
+    "snappy": kw.CODEC_SNAPPY,
+    "lz4": kw.CODEC_LZ4,
+    "zstd": kw.CODEC_ZSTD,
+}
+
+
+def _events_tag(kind: str, sf_dir: str, *salt: str) -> str:
+    """Staging key for ``kind`` over ``sf_dir``'s events file."""
+    from .staging import fingerprint_dir
+
+    return fingerprint_dir(kind, sf_dir, "events", *salt)[0]
+
+
+def _wire_payload(spark, sf_dir: str, doc_cols, where=None):
+    """(kpart, key, value) rows of the events table (those matching
+    ``where``) keyed to Kafka partition ``user_id % WIRE_NPARTS`` (the
+    entity key, never the reference's constant key — SURVEY §1.4.2);
+    ``value`` is the JSON of ``doc_cols``."""
+    from pyspark.sql import functions as F
+
+    from .tables import load_table
+
+    events = load_table(spark, sf_dir, "events")
+    if where is not None:
+        events = events.filter(where)
+    return events.select(
+        (F.col("user_id") % WIRE_NPARTS).cast("int").alias("kpart"),
+        F.col("user_id").cast("string").alias("key"),
+        F.to_json(F.struct(*doc_cols)).alias("value"),
+    )
+
+
+def _event_doc_cols():
+    """The six event fields as the wire and ES paths serialize them
+    (the §1.4.1 JSON codec)."""
+    from pyspark.sql import functions as F
+
+    return (
+        F.col("event_id"),
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+        F.col("user_id"),
+        F.col("event_type"),
+        F.col("value"),
+        F.col("props"),
+    )
+
+
+def _by_kpart(rows) -> dict[int, list[tuple[bytes, bytes]]]:
+    by_kpart: dict[int, list[tuple[bytes, bytes]]] = {}
+    for r in rows:
+        by_kpart.setdefault(r.kpart, []).append((r.key.encode(), r.value.encode()))
+    return by_kpart
+
+
+def _connect(addr: str):
+    host, port = addr.rsplit(":", 1)
+    return socket.create_connection((host, int(port)), timeout=60)
+
+
+def _produce(
+    sock, corr: int, topic: str, kpart: int, batch: bytes, what: str = "produce"
+) -> int:
+    """One Produce v3 request; returns the batch's base offset."""
+    err, offset = kw.parse_produce_response(
+        kw.call(
+            sock,
+            kw.frame_request(
+                kw.API_PRODUCE, 3, corr, kw.produce_request_v3(topic, kpart, batch)
+            ),
+        )
+    )
+    if err != 0:
+        raise IOError(f"{what} refused: error {err}")
+    return offset
 
 
 def stage_events_on_wire(
@@ -294,8 +372,7 @@ def stage_events_on_wire(
     codec cycle) and produce the whole ``events`` table through REAL
     Produce v3 requests — distributed: each Spark task opens its own
     socket and produces its rows, keyed to Kafka partition
-    ``user_id % 8`` (the entity key, never the reference's constant
-    key — SURVEY §1.4.2). ``codecs`` names the per-batch compression
+    ``user_id % 8``. ``codecs`` names the per-batch compression
     cycle (batch i uses ``codecs[i % len]``), so the staged log
     interleaves codecs and a hash-exact roundtrip proves every
     attribute-bits branch in both directions. Returns ``host:port``.
@@ -304,71 +381,24 @@ def stage_events_on_wire(
     same fingerprint reuse the staged log, keeping the query
     idempotent within a session."""
     import atexit
-    import hashlib
-    import os
 
-    from pyspark.sql import functions as F
-
-    from . import kafka_wire as KW
-    from .tables import load_table
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"wire|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{codecs}".encode()
-    ).hexdigest()[:12]
+    tag = _events_tag("wire", sf_dir, str(codecs))
     if tag in _WIRE_BROKERS:
         return _WIRE_BROKERS[tag]
 
-    broker = KW.MiniBroker()
+    broker = kw.MiniBroker()
     addr = broker.start()
     atexit.register(broker.stop)
 
-    payload = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % WIRE_NPARTS).cast("int").alias("kpart"),
-        F.col("user_id").cast("string").alias("key"),
-        F.to_json(
-            F.struct(
-                F.col("event_id"),
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-                F.col("user_id"),
-                F.col("event_type"),
-                F.col("value"),
-                F.col("props"),
-            )
-        ).alias("value"),
-    )
-
     topic = topic or WIRE_TOPIC
-    nparts = WIRE_NPARTS
-    pkg = _repo_root()
-    codec_cycle = codecs
+    codec_cycle = [_WIRE_CODECS[c] for c in codecs]
 
     def _produce_partition(rows):
-        import socket
-        import struct
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
-        from real_time_big_data_analytics_spark.sources import kafka_wire as kw
-
-        codec_ids = {
-            "none": kw.CODEC_NONE,
-            "gzip": kw.CODEC_GZIP,
-            "snappy": kw.CODEC_SNAPPY,
-            "lz4": kw.CODEC_LZ4,
-            "zstd": kw.CODEC_ZSTD,
-        }
-        by_kpart: dict[int, list[tuple[bytes, bytes]]] = {}
-        for r in rows:
-            by_kpart.setdefault(r.kpart, []).append(
-                (r.key.encode(), r.value.encode())
-            )
+        by_kpart = _by_kpart(rows)
         if not by_kpart:
             return
-        host, port = addr.rsplit(":", 1)
         corr = 0
-        with socket.create_connection((host, int(port)), timeout=60) as sock:
+        with _connect(addr) as sock:
             for kpart, recs in by_kpart.items():
                 for bi, i in enumerate(range(0, len(recs), 2000)):
                     # cycle codecs per batch: the log carries every
@@ -378,142 +408,117 @@ def stage_events_on_wire(
                     # compressed)
                     batch = kw.encode_record_batch(
                         recs[i : i + 2000],
-                        codec=codec_ids[
-                            codec_cycle[bi % len(codec_cycle)]
-                        ],
+                        codec=codec_cycle[bi % len(codec_cycle)],
                     )
                     corr += 1
-                    resp = kw.call(
-                        sock,
-                        kw.frame_request(
-                            kw.API_PRODUCE,
-                            3,
-                            corr,
-                            kw.produce_request_v3(topic, kpart, batch),
-                        ),
-                    )
-                    err, _off = kw.parse_produce_response(resp)
-                    if err != 0:
-                        raise IOError(f"produce refused: error {err}")
+                    _produce(sock, corr, topic, kpart, batch)
 
-    payload.foreachPartition(_produce_partition)
+    _wire_payload(spark, sf_dir, _event_doc_cols()).foreachPartition(
+        _produce_partition
+    )
     _WIRE_BROKERS[tag] = addr
     return addr
 
 
-def make_kafka_wire_datasource():
-    """Batch ``format("kafka_wire")`` — one InputPartition per Kafka
-    partition, each task fetching over its own real socket. Function
-    scope so cloudpickle ships the classes BY VALUE (see module
-    docstring); the package itself is re-imported inside ``read`` via
-    the sys.path option."""
+class _WirePartition(InputPartition):
+    def __init__(self, kpart: int):
+        self.kpart = kpart
 
-    class _WirePartition(InputPartition):
-        def __init__(self, kpart: int):
-            self.kpart = kpart
 
-    class _KafkaWireReader(DataSourceReader):
-        def __init__(self, options):
-            self.addr = options["addr"]
-            self.topic = options["topic"]
-            self.nparts = int(options["nparts"])
-            self.pkg = options["pkg"]
-            # "read_uncommitted" (default) | "read_committed" — the
-            # consumer isolation.level knob (KIP-98, round 10)
-            self.isolation = options.get("isolation", "read_uncommitted")
+class _KafkaWireReader(DataSourceReader):
+    def __init__(self, options):
+        self.addr = options["addr"]
+        self.topic = options["topic"]
+        self.nparts = int(options["nparts"])
+        # "read_uncommitted" (default) | "read_committed" — the
+        # consumer isolation.level knob (KIP-98, round 10)
+        self.isolation = options.get("isolation", "read_uncommitted")
 
-        def partitions(self):
-            return [_WirePartition(i) for i in range(self.nparts)]
+    def partitions(self):
+        return [_WirePartition(i) for i in range(self.nparts)]
 
-        def read(self, partition):
-            import socket
-            import struct
-            import sys
-
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            import pyarrow as pa
-
-            from real_time_big_data_analytics_spark.sources import (
-                kafka_wire as kw,
-            )
-
-            committed = self.isolation == "read_committed"
-            host, port = self.addr.rsplit(":", 1)
-            with socket.create_connection((host, int(port)), timeout=60) as sock:
-                resp = kw.call(
-                    sock,
-                    kw.frame_request(
-                        kw.API_FETCH,
-                        4,
+    def read(self, partition):
+        committed = self.isolation == "read_committed"
+        with _connect(self.addr) as sock:
+            resp = kw.call(
+                sock,
+                kw.frame_request(
+                    kw.API_FETCH,
+                    4,
+                    partition.kpart,
+                    kw.fetch_request_v4(
+                        self.topic,
                         partition.kpart,
-                        kw.fetch_request_v4(
-                            self.topic,
-                            partition.kpart,
-                            offset=0,
-                            isolation=kw.READ_COMMITTED
-                            if committed
-                            else kw.READ_UNCOMMITTED,
-                        ),
+                        offset=0,
+                        isolation=kw.READ_COMMITTED
+                        if committed
+                        else kw.READ_UNCOMMITTED,
                     ),
-                )
-            part = kw.parse_fetch_response(resp)[(self.topic, partition.kpart)]
-            kparts, koffs, keys, vals = [], [], [], []
-            if committed:
-                rows = kw.filter_read_committed_with_offsets(
-                    part["record_set"], part["aborted"]
-                )
-            else:
-                rows = [
-                    (base + i, k, v)
-                    for b in kw.split_record_sets(part["record_set"])
-                    # control batches carry txn markers, never app data
-                    if not kw.batch_attributes(b) & kw.ATTR_CONTROL
-                    for (base,) in (struct.unpack(">q", b[:8]),)
-                    for i, (k, v) in enumerate(kw.decode_record_batch(b))
-                ]
-            for off, k, v in rows:
-                kparts.append(partition.kpart)
-                koffs.append(off)
-                keys.append(None if k is None else k.decode())
-                vals.append(v.decode())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(kparts, pa.int32()),
-                    pa.array(koffs, pa.int64()),
-                    pa.array(keys, pa.string()),
-                    pa.array(vals, pa.string()),
-                ],
-                ["kpart", "koffset", "key", "value"],
+                ),
             )
+        part = kw.parse_fetch_response(resp)[(self.topic, partition.kpart)]
+        kparts, koffs, keys, vals = [], [], [], []
+        if committed:
+            rows = kw.filter_read_committed_with_offsets(
+                part["record_set"], part["aborted"]
+            )
+        else:
+            rows = [
+                (base + i, k, v)
+                for b in kw.split_record_sets(part["record_set"])
+                # control batches carry txn markers, never app data
+                if not kw.batch_attributes(b) & kw.ATTR_CONTROL
+                for (base,) in (struct.unpack(">q", b[:8]),)
+                for i, (k, v) in enumerate(kw.decode_record_batch(b))
+            ]
+        for off, k, v in rows:
+            kparts.append(partition.kpart)
+            koffs.append(off)
+            keys.append(None if k is None else k.decode())
+            vals.append(v.decode())
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(kparts, pa.int32()),
+                pa.array(koffs, pa.int64()),
+                pa.array(keys, pa.string()),
+                pa.array(vals, pa.string()),
+            ],
+            ["kpart", "koffset", "key", "value"],
+        )
 
-    class KafkaWireDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "kafka_wire"
 
-        def schema(self) -> str:
-            return "kpart int, koffset bigint, key string, value string"
+class KafkaWireDataSource(DataSource):
+    """Batch ``format("kafka_wire")`` — one InputPartition per Kafka
+    partition, each task fetching over its own real socket."""
 
-        def reader(self, schema):
-            return _KafkaWireReader(self.options)
+    @classmethod
+    def name(cls) -> str:
+        return "kafka_wire"
 
-    return KafkaWireDataSource
+    def schema(self) -> str:
+        return "kpart int, koffset bigint, key string, value string"
+
+    def reader(self, schema):
+        return _KafkaWireReader(self.options)
+
+
+def _scan_wire(spark, addr: str, topic: str, isolation: str = "read_uncommitted"):
+    """Register (idempotent) and scan ``topic`` through ``kafka_wire``."""
+    spark.dataSource.register(KafkaWireDataSource)
+    return (
+        spark.read.format("kafka_wire")
+        .option("addr", addr)
+        .option("topic", topic)
+        .option("nparts", str(WIRE_NPARTS))
+        .option("isolation", isolation)
+        .load()
+    )
 
 
 def read_events_via_kafka_wire(spark, sf_dir: str):
     """Stage (broker + distributed produce, idempotent) and scan the
     topic back through the ``kafka_wire`` batch DataSource."""
-    addr = stage_events_on_wire(spark, sf_dir)
-    spark.dataSource.register(make_kafka_wire_datasource())
-    return (
-        spark.read.format("kafka_wire")
-        .option("addr", addr)
-        .option("topic", WIRE_TOPIC)
-        .option("nparts", str(WIRE_NPARTS))
-        .option("pkg", _repo_root())
-        .load()
-    )
+    return _scan_wire(spark, stage_events_on_wire(spark, sf_dir), WIRE_TOPIC)
 
 
 WIRE_GROUP_TOPIC = "events_grp"
@@ -547,88 +552,37 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
     skips rows (loss) — either breaks the registry hash. Returns the
     parquet dir holding the consumed rows."""
     import atexit
-    import hashlib
-    import os
 
     from pyspark.sql import functions as F
 
-    from . import kafka_wire as KW
     from ..streaming.runner import _session_tmpdir
-    from .tables import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"wiregrp|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
+    tag = _events_tag("wiregrp", sf_dir)
     if tag in _GROUP_RESUME_DIRS:
         return _GROUP_RESUME_DIRS[tag]
 
     data_dir = _session_tmpdir("rtba_grp_broker_")
     out_dir = _session_tmpdir("rtba_grp_consumed_")
     topic, nparts, group = WIRE_GROUP_TOPIC, WIRE_NPARTS, "group"
-    pkg = _repo_root()
-
-    payload = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % nparts).cast("int").alias("kpart"),
-        F.col("event_id"),
-        F.col("user_id").cast("string").alias("key"),
-        F.to_json(
-            F.struct(
-                F.col("event_id"),
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-                F.col("user_id"),
-                F.col("event_type"),
-                F.col("value"),
-                F.col("props"),
-            )
-        ).alias("value"),
-    )
+    doc_cols = _event_doc_cols()
+    parity = F.col("event_id") % 2
 
     def _produce_to(addr: str, df) -> None:
         def _produce_partition(rows):
-            import socket
-            import sys
-
-            if pkg not in sys.path:
-                sys.path.insert(0, pkg)
-            from real_time_big_data_analytics_spark.sources import (
-                kafka_wire as kw,
-            )
-
-            by_kpart: dict[int, list[tuple[bytes, bytes]]] = {}
-            for r in rows:
-                by_kpart.setdefault(r.kpart, []).append(
-                    (r.key.encode(), r.value.encode())
-                )
+            by_kpart = _by_kpart(rows)
             if not by_kpart:
                 return
-            host, port = addr.rsplit(":", 1)
             corr = 0
-            with socket.create_connection(
-                (host, int(port)), timeout=60
-            ) as sock:
+            with _connect(addr) as sock:
                 for kpart, recs in by_kpart.items():
                     for i in range(0, len(recs), 2000):
                         batch = kw.encode_record_batch(
                             recs[i : i + 2000], codec=kw.CODEC_GZIP
                         )
                         corr += 1
-                        resp = kw.call(
-                            sock,
-                            kw.frame_request(
-                                kw.API_PRODUCE,
-                                3,
-                                corr,
-                                kw.produce_request_v3(topic, kpart, batch),
-                            ),
-                        )
-                        err, _off = kw.parse_produce_response(resp)
-                        if err != 0:
-                            raise IOError(f"produce refused: error {err}")
+                        _produce(sock, corr, topic, kpart, batch)
 
-        df.select("kpart", "key", "value").foreachPartition(
-            _produce_partition
-        )
+        df.foreachPartition(_produce_partition)
 
     def _consume_pass(addr: str, half: bool, dest: str) -> None:
         """One Spark task per Kafka partition: coordinator lookup →
@@ -638,22 +592,11 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
 
         def _consume(batches_iter):
             import pandas as pd
-            import socket
-            import sys
-
-            if pkg not in sys.path:
-                sys.path.insert(0, pkg)
-            from real_time_big_data_analytics_spark.sources import (
-                kafka_wire as kw,
-            )
 
             for pdf in batches_iter:
                 for kpart in pdf["id"].tolist():
                     kpart = int(kpart)
-                    host, port = addr.rsplit(":", 1)
-                    with socket.create_connection(
-                        (host, int(port)), timeout=60
-                    ) as sock:
+                    with _connect(addr) as sock:
                         chost, cport = kw.find_coordinator(sock, group)
                         start = kw.offset_fetch(
                             sock, group, topic, [kpart], correlation_id=1
@@ -670,9 +613,7 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
                     # fetch over a coordinator-addressed socket to
                     # prove the redirect target serves data
                     keys, values = [], []
-                    with socket.create_connection(
-                        (chost, int(cport)), timeout=60
-                    ) as sock:
+                    with _connect(f"{chost}:{cport}") as sock:
                         resp = kw.call(
                             sock,
                             kw.frame_request(
@@ -687,9 +628,7 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
                         target = (hw + 1) // 2 if half else hw
                         pos = start
                         for b in kw.split_record_sets(info["record_set"]):
-                            import struct as _st
-
-                            (base,) = _st.unpack(">q", b[:8])
+                            (base,) = struct.unpack(">q", b[:8])
                             if half and base >= target:
                                 break
                             recs = kw.decode_record_batch(b)
@@ -713,17 +652,17 @@ def stage_group_resume_consumed(spark, sf_dir: str) -> str:
             _consume, "key string, value string"
         ).write.mode("overwrite").parquet(dest)
 
-    broker = KW.MiniBroker(data_dir=data_dir)
+    broker = kw.MiniBroker(data_dir=data_dir)
     addr = broker.start()
-    _produce_to(addr, payload.filter(F.col("event_id") % 2 == 0))
+    _produce_to(addr, _wire_payload(spark, sf_dir, doc_cols, parity == 0))
     _consume_pass(addr, half=True, dest=os.path.join(out_dir, "p1"))
     # the crash: a NEW broker (new port) replays the same data_dir —
     # committed offsets and the log must come back from DISK
     broker.stop()
-    broker2 = KW.MiniBroker(data_dir=data_dir)
+    broker2 = kw.MiniBroker(data_dir=data_dir)
     addr2 = broker2.start()
     atexit.register(broker2.stop)
-    _produce_to(addr2, payload.filter(F.col("event_id") % 2 == 1))
+    _produce_to(addr2, _wire_payload(spark, sf_dir, doc_cols, parity == 1))
     _consume_pass(addr2, half=False, dest=os.path.join(out_dir, "p2"))
     _GROUP_RESUME_DIRS[tag] = out_dir
     return out_dir
@@ -744,15 +683,7 @@ def read_events_via_kafka_wire_codec_matrix(spark, sf_dir: str):
         spark, sf_dir, codecs=("lz4", "zstd", "snappy", "gzip", "none"),
         topic=WIRE_CODEC_MATRIX_TOPIC,
     )
-    spark.dataSource.register(make_kafka_wire_datasource())
-    return (
-        spark.read.format("kafka_wire")
-        .option("addr", addr)
-        .option("topic", WIRE_CODEC_MATRIX_TOPIC)
-        .option("nparts", str(WIRE_NPARTS))
-        .option("pkg", _repo_root())
-        .load()
-    )
+    return _scan_wire(spark, addr, WIRE_CODEC_MATRIX_TOPIC)
 
 
 def read_events_via_kafka_wire_snappy(spark, sf_dir: str):
@@ -764,18 +695,77 @@ def read_events_via_kafka_wire_snappy(spark, sf_dir: str):
         spark, sf_dir, codecs=("snappy", "gzip", "none"),
         topic=WIRE_SNAPPY_TOPIC,
     )
-    spark.dataSource.register(make_kafka_wire_datasource())
-    return (
-        spark.read.format("kafka_wire")
-        .option("addr", addr)
-        .option("topic", WIRE_SNAPPY_TOPIC)
-        .option("nparts", str(WIRE_NPARTS))
-        .option("pkg", _repo_root())
-        .load()
-    )
+    return _scan_wire(spark, addr, WIRE_SNAPPY_TOPIC)
 
 
-def make_kafka_wire_stream_datasource():
+class _KafkaWireStreamReader(SimpleDataSourceStreamReader):
+    def __init__(self, options):
+        self.addr = options["addr"]
+        self.topic = options["topic"]
+        self.nparts = int(options["nparts"])
+
+    def initialOffset(self):
+        return {"offs": [0] * self.nparts}
+
+    def _fetch_partition_from(self, kpart: int, offset: int):
+        """(rows at >= offset, high watermark) for one partition —
+        one real Fetch v4 over the reader's own socket; records
+        below the consumer position inside a returned batch are
+        skipped, the real mid-batch-resume semantics."""
+        with _connect(self.addr) as sock:
+            resp = kw.call(
+                sock,
+                kw.frame_request(
+                    kw.API_FETCH,
+                    4,
+                    kpart,
+                    kw.fetch_request_v4(self.topic, kpart, offset=offset),
+                ),
+            )
+        record_set = kw.parse_fetch_record_sets(resp).get(
+            (self.topic, kpart), b""
+        )
+        rows, hw = [], offset
+        for b in kw.split_record_sets(record_set):
+            (base,) = struct.unpack(">q", b[:8])
+            for i, (k, v) in enumerate(kw.decode_record_batch(b)):
+                off = base + i
+                if off < offset:
+                    continue  # consumer position is mid-batch
+                rows.append(
+                    (
+                        kpart,
+                        off,
+                        None if k is None else k.decode(),
+                        v.decode(),
+                    )
+                )
+                hw = max(hw, off + 1)
+        return rows, hw
+
+    def read(self, start):
+        offs = list(start["offs"])
+        rows = []
+        for p in range(self.nparts):
+            new_rows, offs[p] = self._fetch_partition_from(p, offs[p])
+            rows.extend(new_rows)
+        return iter(rows), {"offs": offs}
+
+    def readBetweenOffsets(self, start, end):
+        rows = []
+        for p in range(self.nparts):
+            lo, hi = start["offs"][p], end["offs"][p]
+            if hi <= lo:
+                continue
+            got, _hw = self._fetch_partition_from(p, lo)
+            rows.extend(r for r in got if r[1] < hi)
+        return rows
+
+    def commit(self, end):
+        pass
+
+
+class KafkaWireStreamDataSource(DataSource):
     """Streaming twin — offset-managed fetches from the MiniBroker.
     The stream position is a PER-PARTITION RECORD OFFSET array (the
     real consumer-group model, round 10 — the earlier partition-index
@@ -785,119 +775,41 @@ def make_kafka_wire_stream_datasource():
     records inside returned batches (fetches are batch-granular, like
     real Kafka), and commits the advanced high-watermarks — so a
     kill/restart from the checkpoint is exactly-once under appends
-    (tests/test_kafka_wire.py::test_stream_checkpoint_recovery...).
-    Function scope for the same by-value pickling reason as the JSONL
-    stream source: the streaming-source runner process does not see
-    addPyFile, so the package is made importable via the sys.path
-    option instead."""
+    (tests/test_kafka_wire.py::test_stream_checkpoint_recovery...)."""
 
-    class _KafkaWireStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options):
-            self.addr = options["addr"]
-            self.topic = options["topic"]
-            self.nparts = int(options["nparts"])
-            self.pkg = options["pkg"]
+    @classmethod
+    def name(cls) -> str:
+        return "kafka_wire_stream"
 
-        def initialOffset(self):
-            return {"offs": [0] * self.nparts}
+    def schema(self) -> str:
+        return "kpart int, koffset bigint, key string, value string"
 
-        def _fetch_partition_from(self, kpart: int, offset: int):
-            """(rows at >= offset, high watermark) for one partition —
-            one real Fetch v4 over the reader's own socket; records
-            below the consumer position inside a returned batch are
-            skipped, the real mid-batch-resume semantics."""
-            import socket
-            import struct
-            import sys
-
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            from real_time_big_data_analytics_spark.sources import (
-                kafka_wire as kw,
-            )
-
-            host, port = self.addr.rsplit(":", 1)
-            with socket.create_connection((host, int(port)), timeout=60) as sock:
-                resp = kw.call(
-                    sock,
-                    kw.frame_request(
-                        kw.API_FETCH,
-                        4,
-                        kpart,
-                        kw.fetch_request_v4(self.topic, kpart, offset=offset),
-                    ),
-                )
-            record_set = kw.parse_fetch_record_sets(resp).get(
-                (self.topic, kpart), b""
-            )
-            rows, hw = [], offset
-            for b in kw.split_record_sets(record_set):
-                (base,) = struct.unpack(">q", b[:8])
-                for i, (k, v) in enumerate(kw.decode_record_batch(b)):
-                    off = base + i
-                    if off < offset:
-                        continue  # consumer position is mid-batch
-                    rows.append(
-                        (
-                            kpart,
-                            off,
-                            None if k is None else k.decode(),
-                            v.decode(),
-                        )
-                    )
-                    hw = max(hw, off + 1)
-            return rows, hw
-
-        def read(self, start):
-            offs = list(start["offs"])
-            rows = []
-            for p in range(self.nparts):
-                new_rows, offs[p] = self._fetch_partition_from(p, offs[p])
-                rows.extend(new_rows)
-            return iter(rows), {"offs": offs}
-
-        def readBetweenOffsets(self, start, end):
-            rows = []
-            for p in range(self.nparts):
-                lo, hi = start["offs"][p], end["offs"][p]
-                if hi <= lo:
-                    continue
-                got, _hw = self._fetch_partition_from(p, lo)
-                rows.extend(r for r in got if r[1] < hi)
-            return rows
-
-        def commit(self, end):
-            pass
-
-    class KafkaWireStreamDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "kafka_wire_stream"
-
-        def schema(self) -> str:
-            return "kpart int, koffset bigint, key string, value string"
-
-        def simpleStreamReader(self, schema):
-            return _KafkaWireStreamReader(self.options)
-
-    return KafkaWireStreamDataSource
+    def simpleStreamReader(self, schema):
+        return _KafkaWireStreamReader(self.options)
 
 
 def stream_events_via_kafka_wire(spark, sf_dir: str):
     """Stage (idempotent) and open the streaming scan of the topic."""
     addr = stage_events_on_wire(spark, sf_dir)
-    spark.dataSource.register(make_kafka_wire_stream_datasource())
+    spark.dataSource.register(KafkaWireStreamDataSource)
     return (
         spark.readStream.format("kafka_wire_stream")
         .option("addr", addr)
         .option("topic", WIRE_TOPIC)
         .option("nparts", str(WIRE_NPARTS))
-        .option("pkg", _repo_root())
         .load()
     )
 
 
 WIRE_IDEM_TOPIC = "events_eos"
+WIRE_TXN_TOPIC = "events_txn"
+
+
+def _eos_doc_cols():
+    """The four event fields the exactly-once staging topics carry."""
+    from pyspark.sql import functions as F
+
+    return (F.col("event_id"), F.col("user_id"), F.col("event_type"), F.col("value"))
 
 
 def stage_events_on_wire_idempotent(spark, sf_dir: str) -> str:
@@ -910,78 +822,28 @@ def stage_events_on_wire_idempotent(spark, sf_dir: str) -> str:
     ORIGINAL offset and append nothing; any surviving duplicate
     changes the topic's record count and breaks the registry hash."""
     import atexit
-    import hashlib
-    import os
 
-    from pyspark.sql import functions as F
-
-    from . import kafka_wire as KW
-    from .tables import load_table
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"wireidem|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
+    tag = _events_tag("wireidem", sf_dir)
     if tag in _WIRE_BROKERS:
         return _WIRE_BROKERS[tag]
 
-    broker = KW.MiniBroker()
+    broker = kw.MiniBroker()
     addr = broker.start()
     atexit.register(broker.stop)
-
-    payload = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % WIRE_NPARTS).cast("int").alias("kpart"),
-        F.col("user_id").cast("string").alias("key"),
-        F.to_json(
-            F.struct(
-                F.col("event_id"),
-                F.col("user_id"),
-                F.col("event_type"),
-                F.col("value"),
-            )
-        ).alias("value"),
-    )
-
-    topic, nparts = WIRE_IDEM_TOPIC, WIRE_NPARTS
-    pkg = _repo_root()
+    topic = WIRE_IDEM_TOPIC
 
     def _produce_partition(rows):
-        import socket
-        import struct
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
-        from real_time_big_data_analytics_spark.sources import kafka_wire as kw
-
-        by_kpart: dict[int, list[tuple[bytes, bytes]]] = {}
-        for r in rows:
-            by_kpart.setdefault(r.kpart, []).append(
-                (r.key.encode(), r.value.encode())
-            )
+        by_kpart = _by_kpart(rows)
         if not by_kpart:
             return
-        host, port = addr.rsplit(":", 1)
         corr = 0
-        with socket.create_connection((host, int(port)), timeout=60) as sock:
+        with _connect(addr) as sock:
             pid, epoch = kw.init_producer_id(sock)
 
             def send(batch) -> int:
                 nonlocal corr
                 corr += 1
-                resp = kw.call(
-                    sock,
-                    kw.frame_request(
-                        kw.API_PRODUCE,
-                        3,
-                        corr,
-                        kw.produce_request_v3(topic, kpart, batch),
-                    ),
-                )
-                err, offset = kw.parse_produce_response(resp)
-                if err != 0:
-                    raise IOError(f"produce refused: error {err}")
-                return offset
+                return _produce(sock, corr, topic, kpart, batch)
 
             for kpart, recs in by_kpart.items():
                 seq = 0
@@ -1014,12 +876,9 @@ def stage_events_on_wire_idempotent(spark, sf_dir: str) -> str:
                             f"{acked} != original {orig_offset}"
                         )
 
-    payload.foreachPartition(_produce_partition)
+    _wire_payload(spark, sf_dir, _eos_doc_cols()).foreachPartition(_produce_partition)
     _WIRE_BROKERS[tag] = addr
     return addr
-
-
-WIRE_TXN_TOPIC = "events_txn"
 
 
 def stage_events_on_wire_transactional(spark, sf_dir: str) -> str:
@@ -1035,60 +894,26 @@ def stage_events_on_wire_transactional(spark, sf_dir: str) -> str:
       pins the last-stable offset — data that might still abort must
       be invisible, which is exactly what LSO enforces."""
     import atexit
-    import hashlib
-    import os
 
     from pyspark.sql import functions as F
 
-    from . import kafka_wire as KW
-    from .tables import load_table
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"wiretxn|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
+    tag = _events_tag("wiretxn", sf_dir)
     if tag in _WIRE_BROKERS:
         return _WIRE_BROKERS[tag]
 
-    broker = KW.MiniBroker()
+    broker = kw.MiniBroker()
     addr = broker.start()
     atexit.register(broker.stop)
 
-    payload = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % WIRE_NPARTS).cast("int").alias("kpart"),
-        F.col("user_id").cast("string").alias("key"),
-        F.to_json(
-            F.struct(
-                F.col("event_id"),
-                F.col("user_id"),
-                F.col("event_type"),
-                F.col("value"),
-            )
-        ).alias("value"),
-    )
-
+    payload = _wire_payload(spark, sf_dir, _eos_doc_cols())
     topic, nparts = WIRE_TXN_TOPIC, WIRE_NPARTS
-    pkg = _repo_root()
 
     def _produce_partition(rows):
-        import socket
-        import struct
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
-        from real_time_big_data_analytics_spark.sources import kafka_wire as kw
-
-        by_kpart: dict[int, list[tuple[bytes, bytes]]] = {}
-        for r in rows:
-            by_kpart.setdefault(r.kpart, []).append(
-                (r.key.encode(), r.value.encode())
-            )
+        by_kpart = _by_kpart(rows)
         if not by_kpart:
             return
-        host, port = addr.rsplit(":", 1)
         corr = 0
-        with socket.create_connection((host, int(port)), timeout=60) as sock:
+        with _connect(addr) as sock:
             pid, epoch = kw.init_producer_id(sock)
             for kpart, recs in by_kpart.items():
                 seq = 0
@@ -1103,18 +928,7 @@ def stage_events_on_wire_transactional(spark, sf_dir: str) -> str:
                     )
                     seq += len(chunk)
                     corr += 1
-                    resp = kw.call(
-                        sock,
-                        kw.frame_request(
-                            kw.API_PRODUCE,
-                            3,
-                            corr,
-                            kw.produce_request_v3(topic, kpart, batch),
-                        ),
-                    )
-                    err, _off = kw.parse_produce_response(resp)
-                    if err != 0:
-                        raise IOError(f"produce refused: error {err}")
+                    _produce(sock, corr, topic, kpart, batch)
             corr += 1
             kw.end_txn(sock, f"task-{pid}", pid, epoch, commit=True,
                        correlation_id=corr)
@@ -1122,48 +936,29 @@ def stage_events_on_wire_transactional(spark, sf_dir: str) -> str:
     payload.foreachPartition(_produce_partition)
 
     # the adversaries (driver-side, bounded: a few rows per partition)
-    import socket
-
-    decoys = [
-        (r.kpart, r.key.encode(), r.value.encode())
-        for r in payload.filter(F.col("key").cast("bigint") < 16).collect()
-    ]  # bounded: at most 16 users' rows
-    host, port = addr.rsplit(":", 1)
-    with socket.create_connection((host, int(port)), timeout=60) as sock:
-        apid, aepoch = KW.init_producer_id(sock)
-        seqs: dict[int, int] = {}
+    decoys = _by_kpart(
+        payload.filter(F.col("key").cast("bigint") < 16).collect()
+    )  # bounded: at most 16 users' rows
+    with _connect(addr) as sock:
+        apid, aepoch = kw.init_producer_id(sock)
         corr = 0
-        by_part: dict[int, list[tuple[bytes, bytes]]] = {}
-        for kpart, k, v in decoys:
-            by_part.setdefault(kpart, []).append((k, v))
-        for kpart, recs in by_part.items():
-            batch = KW.encode_record_batch(
+        for kpart, recs in decoys.items():
+            batch = kw.encode_record_batch(
                 recs,
                 producer_id=apid,
                 producer_epoch=aepoch,
-                base_sequence=seqs.get(kpart, 0),
+                base_sequence=0,
                 transactional=True,
             )
-            seqs[kpart] = seqs.get(kpart, 0) + len(recs)
             corr += 1
-            err, _off = KW.parse_produce_response(
-                KW.call(
-                    sock,
-                    KW.frame_request(
-                        KW.API_PRODUCE, 3, corr,
-                        KW.produce_request_v3(topic, kpart, batch),
-                    ),
-                )
-            )
-            if err != 0:
-                raise IOError(f"decoy produce refused: error {err}")
+            _produce(sock, corr, topic, kpart, batch, "decoy produce")
         corr += 1
-        KW.end_txn(sock, "decoy", apid, aepoch, commit=False,
+        kw.end_txn(sock, "decoy", apid, aepoch, commit=False,
                    correlation_id=corr)
         # the OPEN transaction: one marker-less batch per partition
-        opid, oepoch = KW.init_producer_id(sock)
+        opid, oepoch = kw.init_producer_id(sock)
         for kpart in range(nparts):
-            batch = KW.encode_record_batch(
+            batch = kw.encode_record_batch(
                 [(b"open", b'{"event_id":-1}')],
                 producer_id=opid,
                 producer_epoch=oepoch,
@@ -1171,17 +966,7 @@ def stage_events_on_wire_transactional(spark, sf_dir: str) -> str:
                 transactional=True,
             )
             corr += 1
-            err, _off = KW.parse_produce_response(
-                KW.call(
-                    sock,
-                    KW.frame_request(
-                        KW.API_PRODUCE, 3, corr,
-                        KW.produce_request_v3(topic, kpart, batch),
-                    ),
-                )
-            )
-            if err != 0:
-                raise IOError(f"open-txn produce refused: error {err}")
+            _produce(sock, corr, topic, kpart, batch, "open-txn produce")
     _WIRE_BROKERS[tag] = addr
     return addr
 
@@ -1192,31 +977,14 @@ def read_events_via_kafka_wire_transactional(
     """Stage (transactional producers + aborted/open adversaries) and
     scan the topic back at the requested isolation level."""
     addr = stage_events_on_wire_transactional(spark, sf_dir)
-    spark.dataSource.register(make_kafka_wire_datasource())
-    return (
-        spark.read.format("kafka_wire")
-        .option("addr", addr)
-        .option("topic", WIRE_TXN_TOPIC)
-        .option("nparts", str(WIRE_NPARTS))
-        .option("pkg", _repo_root())
-        .option("isolation", isolation)
-        .load()
-    )
+    return _scan_wire(spark, addr, WIRE_TXN_TOPIC, isolation=isolation)
 
 
 def read_events_via_kafka_wire_idempotent(spark, sf_dir: str):
     """Stage with idempotent producers + deliberate replays, then scan
     the topic back through the ``kafka_wire`` batch DataSource."""
     addr = stage_events_on_wire_idempotent(spark, sf_dir)
-    spark.dataSource.register(make_kafka_wire_datasource())
-    return (
-        spark.read.format("kafka_wire")
-        .option("addr", addr)
-        .option("topic", WIRE_IDEM_TOPIC)
-        .option("nparts", str(WIRE_NPARTS))
-        .option("pkg", _repo_root())
-        .load()
-    )
+    return _scan_wire(spark, addr, WIRE_IDEM_TOPIC)
 
 
 # ---------------------------------------------------------------------
@@ -1254,139 +1022,65 @@ AVRO_EVENTS_DDL = (
     "event_id bigint, ts_us bigint, user_id bigint, "
     "event_type string, value double, props string"
 )
+_AVRO_COLS = ["event_id", "ts_us", "user_id", "event_type", "value", "props"]
 
 
-def make_avro_ocf_datasource():
-    """Batch ``format("avro_ocf")`` reader + writer. Function scope so
-    cloudpickle ships the classes BY VALUE; the codec module is
-    re-imported inside read/write via the sys.path option (the
-    --py-files pattern — see the kafka_wire comment above)."""
+class _AvroReader(DataSourceReader):
+    def __init__(self, options):
+        self.dir = options["path"]
 
-    class _AvroPartition(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
+    def partitions(self):
+        return [_FilePartition(p) for p in _part_files(self.dir, (".avro",))]
 
-    class _AvroCommit(WriterCommitMessage):
-        def __init__(self, path: str, n: int):
-            self.path = path
-            self.n = n
+    def read(self, partition):
+        cols: dict[str, list] = {c: [] for c in _AVRO_COLS}
+        for row in avro_ocf.read_ocf(partition.path):
+            for k in cols:
+                cols[k].append(row[k])
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(cols["event_id"], pa.int64()),
+                pa.array(cols["ts_us"], pa.int64()),
+                pa.array(cols["user_id"], pa.int64()),
+                pa.array(cols["event_type"], pa.string()),
+                pa.array(cols["value"], pa.float64()),
+                pa.array(cols["props"], pa.string()),
+            ],
+            _AVRO_COLS,
+        )
 
-    class _AvroReader(DataSourceReader):
-        def __init__(self, options):
-            self.dir = options["path"]
-            self.pkg = options["pkg"]
 
-        def partitions(self):
-            import os
+class _AvroWriter(_RenameCommitWriter):
+    def __init__(self, options):
+        super().__init__(options)
+        self.codec = options.get("codec", "deflate")
+        self.schema = json.loads(options["avroschema"])
 
-            return [
-                _AvroPartition(os.path.join(self.dir, f))
-                for f in sorted(os.listdir(self.dir))
-                if f.endswith(".avro") and not f.startswith("_tmp_")
-            ]
+    def write(self, iterator):
+        tmp = self._tmp_path(".avro")
+        n = avro_ocf.write_ocf(
+            tmp, self.schema, (r.asDict() for r in iterator), codec=self.codec
+        )
+        return _FileCommit(tmp, n)
 
-        def read(self, partition):
-            import sys
 
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            import pyarrow as pa
+class AvroOcfDataSource(DataSource):
+    """Batch ``format("avro_ocf")`` reader + writer of the events
+    table's Avro container part files."""
 
-            from real_time_big_data_analytics_spark.sources import avro_ocf
+    @classmethod
+    def name(cls) -> str:
+        return "avro_ocf"
 
-            cols: dict[str, list] = {
-                "event_id": [],
-                "ts_us": [],
-                "user_id": [],
-                "event_type": [],
-                "value": [],
-                "props": [],
-            }
-            for row in avro_ocf.read_ocf(partition.path):
-                for k in cols:
-                    cols[k].append(row[k])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols["event_id"], pa.int64()),
-                    pa.array(cols["ts_us"], pa.int64()),
-                    pa.array(cols["user_id"], pa.int64()),
-                    pa.array(cols["event_type"], pa.string()),
-                    pa.array(cols["value"], pa.float64()),
-                    pa.array(cols["props"], pa.string()),
-                ],
-                list(cols),
-            )
+    def schema(self) -> str:
+        return AVRO_EVENTS_DDL
 
-    class _AvroWriter(DataSourceWriter):
-        def __init__(self, options):
-            self.dir = options["path"]
-            self.codec = options.get("codec", "deflate")
-            self.pkg = options["pkg"]
-            # schema rides in as JSON: no module-global reference for
-            # cloudpickle to resolve on the executor side
-            self.schema_json = options["avroschema"]
+    def reader(self, schema):
+        return _AvroReader(self.options)
 
-        def write(self, iterator):
-            import json
-            import os
-            import sys
-
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            from pyspark import TaskContext
-
-            from real_time_big_data_analytics_spark.sources import avro_ocf
-
-            pid = TaskContext.get().partitionId()
-            tmp = os.path.join(self.dir, f"_tmp_part-{pid:05d}.avro")
-            n = avro_ocf.write_ocf(
-                tmp,
-                json.loads(self.schema_json),
-                (r.asDict() for r in iterator),
-                codec=self.codec,
-            )
-            return _AvroCommit(tmp, n)
-
-        def commit(self, messages):
-            import os
-
-            for m in messages:
-                os.replace(m.path, m.path.replace("_tmp_part-", "part-"))
-            with open(os.path.join(self.dir, "_SUCCESS"), "w") as f:
-                f.write(str(sum(m.n for m in messages)))
-
-        def abort(self, messages):
-            import os
-
-            for m in messages:
-                try:
-                    os.remove(m.path)
-                except OSError:
-                    pass
-
-    class AvroOcfDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "avro_ocf"
-
-        def schema(self) -> str:
-            return AVRO_EVENTS_DDL
-
-        def reader(self, schema):
-            return _AvroReader(self.options)
-
-        def writer(self, schema, overwrite):
-            import os
-
-            d = self.options["path"]
-            os.makedirs(d, exist_ok=True)
-            if overwrite:
-                for f in os.listdir(d):
-                    if f.endswith(".avro") or f == "_SUCCESS":
-                        os.remove(os.path.join(d, f))
-            return _AvroWriter(self.options)
-
-    return AvroOcfDataSource
+    def writer(self, schema, overwrite):
+        _open_out_dir(self.options["path"], ".avro", overwrite)
+        return _AvroWriter(self.options)
 
 
 _AVRO_DIRS: dict[str, str] = {}
@@ -1397,22 +1091,15 @@ def stage_events_as_avro(spark, sf_dir: str, codec: str = "deflate") -> str:
     through Spark's write path (one file per task, task-commit
     rename). Staged once per (events fingerprint, codec) and reused —
     idempotent within a session like the wire broker."""
-    import hashlib
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from .staging import fingerprint_dir
     from .tables import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"avro|{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{codec}".encode()
-    ).hexdigest()[:12]
+    tag, out = fingerprint_dir("avro", sf_dir, "events", codec)
     if tag in _AVRO_DIRS:
         return _AVRO_DIRS[tag]
-    out = os.path.join(tempfile.gettempdir(), f"rtba_avro_{tag}")
-    spark.dataSource.register(make_avro_ocf_datasource())
+    spark.dataSource.register(AvroOcfDataSource)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         df = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -1422,15 +1109,12 @@ def stage_events_as_avro(spark, sf_dir: str, codec: str = "deflate") -> str:
             "value",
             "props",
         )
-        import json
-
         (
             df.write.format("avro_ocf")
             .mode("overwrite")
             .option("path", out)
             .option("codec", codec)
             .option("avroschema", json.dumps(AVRO_EVENTS_SCHEMA))
-            .option("pkg", _repo_root())
             .save()
         )
     _AVRO_DIRS[tag] = out
@@ -1440,97 +1124,38 @@ def stage_events_as_avro(spark, sf_dir: str, codec: str = "deflate") -> str:
 def read_events_via_avro_ocf(spark, sf_dir: str, codec: str = "deflate"):
     """Stage (idempotent) and scan back through ``format("avro_ocf")``."""
     out = stage_events_as_avro(spark, sf_dir, codec=codec)
-    spark.dataSource.register(make_avro_ocf_datasource())
-    return (
-        spark.read.format("avro_ocf")
-        .option("path", out)
-        .option("pkg", _repo_root())
-        .load()
-    )
+    spark.dataSource.register(AvroOcfDataSource)
+    return spark.read.format("avro_ocf").option("path", out).load()
 
 
-def make_avro_ocf_stream_datasource():
+class _AvroStreamReader(_FileLogStreamReader):
+    suffixes = (".avro",)
+
+    def _rows(self, path):
+        return [tuple(r[c] for c in _AVRO_COLS) for r in avro_ocf.read_ocf(path)]
+
+
+class AvroOcfStreamDataSource(DataSource):
     """STREAMING twin of the avro_ocf batch reader — one container
-    part file per micro-batch, offset = next file index (files are
-    the replayable log; recovery re-reads from the committed index
-    like a Kafka offset seek). Function scope for the same by-value
-    pickling reason as the JSONL stream source; the codec module is
-    imported via the sys.path option because the streaming-source
-    runner process does not see addPyFile."""
+    part file per micro-batch."""
 
-    class _AvroStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options):
-            self.dir = options["path"]
-            self.pkg = options["pkg"]
+    @classmethod
+    def name(cls) -> str:
+        return "avro_ocf_stream"
 
-        def _files(self):
-            import os
+    def schema(self) -> str:
+        return AVRO_EVENTS_DDL
 
-            return [
-                os.path.join(self.dir, f)
-                for f in sorted(os.listdir(self.dir))
-                if f.endswith(".avro") and not f.startswith("_tmp_")
-            ]
-
-        def initialOffset(self):
-            return {"idx": 0}
-
-        def read(self, start):
-            i = start["idx"]
-            files = self._files()
-            if i >= len(files):
-                return iter([]), {"idx": i}
-            import sys
-
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            from real_time_big_data_analytics_spark.sources import avro_ocf
-
-            rows = [
-                (
-                    r["event_id"],
-                    r["ts_us"],
-                    r["user_id"],
-                    r["event_type"],
-                    r["value"],
-                    r["props"],
-                )
-                for r in avro_ocf.read_ocf(files[i])
-            ]
-            return iter(rows), {"idx": i + 1}
-
-        def readBetweenOffsets(self, start, end):
-            rows, _ = self.read(start)
-            return rows
-
-        def commit(self, end):
-            pass
-
-    class AvroOcfStreamDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "avro_ocf_stream"
-
-        def schema(self) -> str:
-            return AVRO_EVENTS_DDL
-
-        def simpleStreamReader(self, schema):
-            return _AvroStreamReader(self.options)
-
-    return AvroOcfStreamDataSource
+    def simpleStreamReader(self, schema):
+        return _AvroStreamReader(self.options)
 
 
 def stream_events_via_avro_ocf(spark, sf_dir: str, codec: str = "deflate"):
     """Stage (idempotent) and open the streaming scan over the staged
     container files."""
     out = stage_events_as_avro(spark, sf_dir, codec=codec)
-    spark.dataSource.register(make_avro_ocf_stream_datasource())
-    return (
-        spark.readStream.format("avro_ocf_stream")
-        .option("path", out)
-        .option("pkg", _repo_root())
-        .load()
-    )
+    spark.dataSource.register(AvroOcfStreamDataSource)
+    return spark.readStream.format("avro_ocf_stream").option("path", out).load()
 
 
 # ---------------------------------------------------------------------
@@ -1562,84 +1187,65 @@ def _es_addr(spark, sf_dir: str) -> str:
     return ``host:port``. The server outlives this call (atexit stop)
     so lazy DataFrames returned by scan queries stay servable."""
     import atexit
-    import hashlib
-    import os
 
-    from . import es_wire as EW
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"es|{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
+    tag = _events_tag("es", sf_dir)
     if tag not in _ES_SERVERS:
-        server = EW.MiniES()
+        server = ew.MiniES()
         _ES_SERVERS[tag] = server.start()
         atexit.register(server.stop)
     return _ES_SERVERS[tag]
 
 
-def _events_payload(spark, sf_dir: str):
-    """(_id, source-doc) projection of the events table — the same
-    JSON shape the kafka wire path transports (§1.4.1 codec)."""
+def _es_docs(events):
+    """(es_id, doc) projection of an events frame (batch or stream) —
+    the same JSON shape the kafka wire path transports (§1.4.1 codec)."""
     from pyspark.sql import functions as F
 
-    from .tables import load_table
-
-    return load_table(spark, sf_dir, "events").select(
+    return events.select(
         F.col("event_id").cast("string").alias("es_id"),
-        F.to_json(
-            F.struct(
-                F.col("event_id"),
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-                F.col("user_id"),
-                F.col("event_type"),
-                F.col("value"),
-                F.col("props"),
-            )
-        ).alias("doc"),
+        F.to_json(F.struct(*_event_doc_cols())).alias("doc"),
     )
 
 
-def bulk_index_partition_fn(addr: str, index: str, pkg: str):
-    """Build the ``foreachPartition`` task body: one HTTP connection
-    per Spark task, ``_bulk`` NDJSON chunks, per-item error check. A
-    nested def so cloudpickle ships it BY VALUE (closure over plain
-    strings only — the verify-recipe trap)."""
+def _http(addr: str):
+    host, port = addr.rsplit(":", 1)
+    return http.client.HTTPConnection(host, int(port), timeout=60)
+
+
+def _bulk_index(addr: str, index: str, rows) -> int:
+    """Bulk-index ``rows`` of (es_id, doc) over one HTTP connection in
+    ``_bulk`` NDJSON chunks, checking every item; returns the count."""
+    buf = [(r.es_id, r.doc) for r in rows]
+    if not buf:
+        return 0
+    conn = _http(addr)
+    try:
+        for i in range(0, len(buf), ES_BULK_CHUNK):
+            nd = []
+            for es_id, doc in buf[i : i + ES_BULK_CHUNK]:
+                nd.append(json.dumps({"index": {"_index": index, "_id": es_id}}))
+                nd.append(doc)
+            body = ("\n".join(nd) + "\n").encode("utf-8")
+            resp = ew.es_request_on(
+                conn, "POST", "/_bulk", body, "application/x-ndjson"
+            )
+            if resp.get("errors"):
+                bad = next(
+                    it for it in resp["items"]
+                    if next(iter(it.values())).get("error")
+                )
+                raise IOError(f"bulk indexing refused: {bad}")
+    finally:
+        conn.close()
+    return len(buf)
+
+
+def bulk_index_partition_fn(addr: str, index: str):
+    """The ``foreachPartition`` task body: one HTTP connection per
+    Spark task, ``_bulk`` NDJSON chunks, per-item error check."""
 
     def _index_partition(rows):
-        import http.client
-        import json as _json
-        import sys
-
-        if pkg not in sys.path:
-            sys.path.insert(0, pkg)
-        from real_time_big_data_analytics_spark.sources import es_wire as ew
-
-        buf: list[tuple[str, str]] = [(r.es_id, r.doc) for r in rows]
-        if not buf:
-            return
-        host, port = addr.rsplit(":", 1)
-        conn = http.client.HTTPConnection(host, int(port), timeout=60)
-        try:
-            for i in range(0, len(buf), ES_BULK_CHUNK):
-                nd = []
-                for es_id, doc in buf[i : i + ES_BULK_CHUNK]:
-                    nd.append(
-                        _json.dumps({"index": {"_index": index, "_id": es_id}})
-                    )
-                    nd.append(doc)
-                body = ("\n".join(nd) + "\n").encode("utf-8")
-                resp = ew.es_request_on(
-                    conn, "POST", "/_bulk", body, "application/x-ndjson"
-                )
-                if resp.get("errors"):
-                    bad = next(
-                        it for it in resp["items"]
-                        if next(iter(it.values())).get("error")
-                    )
-                    raise IOError(f"bulk indexing refused: {bad}")
-        finally:
-            conn.close()
+        _bulk_index(addr, index, rows)
 
     return _index_partition
 
@@ -1652,118 +1258,110 @@ def stage_events_in_es(spark, sf_dir: str) -> str:
     ``_id`` is last-write-wins, so the retry converges on the same
     index state (the ES-semantics idempotency the reference's sink
     relied on)."""
-    import json
-
-    from . import es_wire as EW
+    from .tables import load_table
 
     addr = _es_addr(spark, sf_dir)
     key = f"{addr}/{ES_INDEX}"
     if key in _ES_STAGED:
         return addr
-    EW.ensure_index(addr, ES_INDEX, ES_NSHARDS)
-    _events_payload(spark, sf_dir).foreachPartition(
-        bulk_index_partition_fn(addr, ES_INDEX, _repo_root())
+    ew.ensure_index(addr, ES_INDEX, ES_NSHARDS)
+    _es_docs(load_table(spark, sf_dir, "events")).foreachPartition(
+        bulk_index_partition_fn(addr, ES_INDEX)
     )
-    EW.es_request(addr, "POST", f"/{ES_INDEX}/_refresh")
+    ew.es_request(addr, "POST", f"/{ES_INDEX}/_refresh")
     _ES_STAGED.add(key)
     return addr
 
 
-def make_es_wire_datasource():
+class _EsSlicePartition(InputPartition):
+    def __init__(self, slice_id: int):
+        self.slice_id = slice_id
+
+
+def _sliced_scroll(addr: str, index: str, slice_id: int, nslices: int, query: dict):
+    """Every hit of one scroll slice, driven to completion over one
+    HTTP connection (the es-hadoop read model)."""
+    conn = _http(addr)
+    hits = []
+    try:
+        body = json.dumps(
+            {
+                "slice": {"id": slice_id, "max": nslices},
+                "size": 2000,
+                "sort": ["_doc"],
+                "query": query,
+            }
+        ).encode()
+        resp = ew.es_request_on(conn, "POST", f"/{index}/_search?scroll=1m", body)
+        scroll_id = resp.get("_scroll_id")
+        while resp["hits"]["hits"]:
+            hits.extend(resp["hits"]["hits"])
+            resp = ew.es_request_on(
+                conn,
+                "POST",
+                "/_search/scroll",
+                json.dumps({"scroll": "1m", "scroll_id": scroll_id}).encode(),
+            )
+        if scroll_id:
+            ew.es_request_on(
+                conn,
+                "DELETE",
+                "/_search/scroll",
+                json.dumps({"scroll_id": scroll_id}).encode(),
+            )
+    finally:
+        conn.close()
+    return hits
+
+
+class _EsWireReader(DataSourceReader):
+    def __init__(self, options):
+        self.addr = options["addr"]
+        self.index = options["index"]
+        self.nslices = int(options["nslices"])
+
+    def partitions(self):
+        return [_EsSlicePartition(i) for i in range(self.nslices)]
+
+    def read(self, partition):
+        hits = _sliced_scroll(
+            self.addr, self.index, partition.slice_id, self.nslices, {"match_all": {}}
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([partition.slice_id] * len(hits), pa.int32()),
+                pa.array([h["_id"] for h in hits], pa.string()),
+                pa.array([json.dumps(h["_source"]) for h in hits], pa.string()),
+            ],
+            ["slice_id", "es_id", "source"],
+        )
+
+
+class EsWireDataSource(DataSource):
     """Batch ``format("es_wire")`` — one InputPartition per scroll
     slice; each task opens its own HTTP connection and drives a sliced
-    scroll to completion (the es-hadoop read model). Function scope so
-    cloudpickle ships the classes BY VALUE; the wire module is
-    re-imported inside ``read`` via the sys.path option."""
+    scroll to completion (the es-hadoop read model)."""
 
-    class _EsSlicePartition(InputPartition):
-        def __init__(self, slice_id: int):
-            self.slice_id = slice_id
+    @classmethod
+    def name(cls) -> str:
+        return "es_wire"
 
-    class _EsWireReader(DataSourceReader):
-        def __init__(self, options):
-            self.addr = options["addr"]
-            self.index = options["index"]
-            self.nslices = int(options["nslices"])
-            self.pkg = options["pkg"]
+    def schema(self) -> str:
+        return "slice_id int, es_id string, source string"
 
-        def partitions(self):
-            return [_EsSlicePartition(i) for i in range(self.nslices)]
+    def reader(self, schema):
+        return _EsWireReader(self.options)
 
-        def read(self, partition):
-            import http.client
-            import json as _json
-            import sys
 
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            import pyarrow as pa
-
-            from real_time_big_data_analytics_spark.sources import es_wire as ew
-
-            host, port = self.addr.rsplit(":", 1)
-            conn = http.client.HTTPConnection(host, int(port), timeout=60)
-            ids, srcs = [], []
-            try:
-                body = _json.dumps(
-                    {
-                        "slice": {"id": partition.slice_id, "max": self.nslices},
-                        "size": 2000,
-                        "sort": ["_doc"],
-                        "query": {"match_all": {}},
-                    }
-                ).encode()
-                resp = ew.es_request_on(
-                    conn, "POST", f"/{self.index}/_search?scroll=1m", body
-                )
-                scroll_id = resp.get("_scroll_id")
-                while True:
-                    hits = resp["hits"]["hits"]
-                    if not hits:
-                        break
-                    for h in hits:
-                        ids.append(h["_id"])
-                        srcs.append(_json.dumps(h["_source"]))
-                    resp = ew.es_request_on(
-                        conn,
-                        "POST",
-                        "/_search/scroll",
-                        _json.dumps(
-                            {"scroll": "1m", "scroll_id": scroll_id}
-                        ).encode(),
-                    )
-                if scroll_id:
-                    ew.es_request_on(
-                        conn,
-                        "DELETE",
-                        "/_search/scroll",
-                        _json.dumps({"scroll_id": scroll_id}).encode(),
-                    )
-            finally:
-                conn.close()
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        [partition.slice_id] * len(ids), pa.int32()
-                    ),
-                    pa.array(ids, pa.string()),
-                    pa.array(srcs, pa.string()),
-                ],
-                ["slice_id", "es_id", "source"],
-            )
-
-    class EsWireDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "es_wire"
-
-        def schema(self) -> str:
-            return "slice_id int, es_id string, source string"
-
-        def reader(self, schema):
-            return _EsWireReader(self.options)
-
-    return EsWireDataSource
+def _scan_es(spark, fmt: str, addr: str, index: str):
+    """Scan ``index`` through the (registered) ``fmt`` DataSource."""
+    return (
+        spark.read.format(fmt)
+        .option("addr", addr)
+        .option("index", index)
+        .option("nslices", str(ES_NSHARDS))
+        .load()
+    )
 
 
 def read_events_via_es_wire(spark, sf_dir: str, index: str = None):
@@ -1774,18 +1372,63 @@ def read_events_via_es_wire(spark, sf_dir: str, index: str = None):
         index = ES_INDEX
     else:
         addr = _es_addr(spark, sf_dir)
-    spark.dataSource.register(make_es_wire_datasource())
-    return (
-        spark.read.format("es_wire")
-        .option("addr", addr)
-        .option("index", index)
-        .option("nslices", str(ES_NSHARDS))
-        .option("pkg", _repo_root())
-        .load()
-    )
+    spark.dataSource.register(EsWireDataSource)
+    return _scan_es(spark, "es_wire", addr, index)
 
 
-def make_es_wire_typed_datasource():
+_ES_TYPED_FIELDS = (
+    ("event_id", "int64"),
+    ("ts", "string"),
+    ("user_id", "int64"),
+    ("event_type", "string"),
+    ("value", "float64"),
+)
+_ES_RANGE_OPS = {
+    GreaterThan: "gt",
+    GreaterThanOrEqual: "gte",
+    LessThan: "lt",
+    LessThanOrEqual: "lte",
+}
+
+
+class _EsWireTypedReader(_EsWireReader):
+    def __init__(self, options):
+        super().__init__(options)
+        self.dsl: list[dict] = []
+
+    def pushFilters(self, filters):
+        cols = {f for f, _ in _ES_TYPED_FIELDS}
+        for f in filters:
+            attr = getattr(f, "attribute", None)
+            col = attr[0] if attr and len(attr) == 1 else None
+            if col not in cols:
+                yield f  # nested / unknown column: Spark evaluates
+            elif isinstance(f, EqualTo):
+                self.dsl.append({"term": {col: {"value": f.value}}})
+            elif isinstance(f, In):
+                self.dsl.append({"terms": {col: list(f.value)}})
+            elif type(f) in _ES_RANGE_OPS:
+                self.dsl.append({"range": {col: {_ES_RANGE_OPS[type(f)]: f.value}}})
+            elif isinstance(f, IsNotNull):
+                self.dsl.append({"exists": {"field": col}})
+            else:
+                yield f  # unsupported shape (Not, StringContains…)
+
+    def read(self, partition):
+        query = {"bool": {"filter": self.dsl}} if self.dsl else {"match_all": {}}
+        hits = _sliced_scroll(
+            self.addr, self.index, partition.slice_id, self.nslices, query
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([h["_source"].get(f) for h in hits], t)
+                for f, t in _ES_TYPED_FIELDS
+            ],
+            [f for f, _ in _ES_TYPED_FIELDS],
+        )
+
+
+class EsWireTypedDataSource(DataSource):
     """Typed ``format("es_wire_typed")`` with FILTER PUSHDOWN (round 9,
     VERDICT r8 ask #4) — the es-hadoop model: Spark's pushed data-source
     filters are translated into Query-DSL ``bool.filter`` clauses
@@ -1799,141 +1442,18 @@ def make_es_wire_typed_datasource():
     staging helper below; harmless for other Python sources — their
     default pushFilters yields everything back)."""
 
-    class _EsSlicePartition(InputPartition):
-        def __init__(self, slice_id: int):
-            self.slice_id = slice_id
+    @classmethod
+    def name(cls) -> str:
+        return "es_wire_typed"
 
-    _FIELDS = (
-        ("event_id", "int64"),
-        ("ts", "string"),
-        ("user_id", "int64"),
-        ("event_type", "string"),
-        ("value", "float64"),
-    )
+    def schema(self) -> str:
+        return (
+            "event_id bigint, ts string, user_id bigint, "
+            "event_type string, value double"
+        )
 
-    class _EsWireTypedReader(DataSourceReader):
-        def __init__(self, options):
-            self.addr = options["addr"]
-            self.index = options["index"]
-            self.nslices = int(options["nslices"])
-            self.pkg = options["pkg"]
-            self.dsl: list[dict] = []
-
-        def pushFilters(self, filters):
-            from pyspark.sql.datasource import (
-                EqualTo,
-                GreaterThan,
-                GreaterThanOrEqual,
-                In,
-                IsNotNull,
-                LessThan,
-                LessThanOrEqual,
-            )
-
-            cols = {f for f, _ in _FIELDS}
-            range_ops = {
-                GreaterThan: "gt",
-                GreaterThanOrEqual: "gte",
-                LessThan: "lt",
-                LessThanOrEqual: "lte",
-            }
-            for f in filters:
-                attr = getattr(f, "attribute", None)
-                col = attr[0] if attr and len(attr) == 1 else None
-                if col not in cols:
-                    yield f  # nested / unknown column: Spark evaluates
-                elif isinstance(f, EqualTo):
-                    self.dsl.append({"term": {col: {"value": f.value}}})
-                elif isinstance(f, In):
-                    self.dsl.append({"terms": {col: list(f.value)}})
-                elif type(f) in range_ops:
-                    self.dsl.append(
-                        {"range": {col: {range_ops[type(f)]: f.value}}}
-                    )
-                elif isinstance(f, IsNotNull):
-                    self.dsl.append({"exists": {"field": col}})
-                else:
-                    yield f  # unsupported shape (Not, StringContains…)
-
-        def partitions(self):
-            return [_EsSlicePartition(i) for i in range(self.nslices)]
-
-        def read(self, partition):
-            import http.client
-            import json as _json
-            import sys
-
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            import pyarrow as pa
-
-            from real_time_big_data_analytics_spark.sources import es_wire as ew
-
-            query = (
-                {"bool": {"filter": self.dsl}} if self.dsl
-                else {"match_all": {}}
-            )
-            host, port = self.addr.rsplit(":", 1)
-            conn = http.client.HTTPConnection(host, int(port), timeout=60)
-            cols: dict[str, list] = {f: [] for f, _ in _FIELDS}
-            try:
-                body = _json.dumps(
-                    {
-                        "slice": {"id": partition.slice_id, "max": self.nslices},
-                        "size": 2000,
-                        "sort": ["_doc"],
-                        "query": query,
-                    }
-                ).encode()
-                resp = ew.es_request_on(
-                    conn, "POST", f"/{self.index}/_search?scroll=1m", body
-                )
-                scroll_id = resp.get("_scroll_id")
-                while True:
-                    hits = resp["hits"]["hits"]
-                    if not hits:
-                        break
-                    for h in hits:
-                        src = h["_source"]
-                        for f, _t in _FIELDS:
-                            cols[f].append(src.get(f))
-                    resp = ew.es_request_on(
-                        conn,
-                        "POST",
-                        "/_search/scroll",
-                        _json.dumps(
-                            {"scroll": "1m", "scroll_id": scroll_id}
-                        ).encode(),
-                    )
-                if scroll_id:
-                    ew.es_request_on(
-                        conn,
-                        "DELETE",
-                        "/_search/scroll",
-                        _json.dumps({"scroll_id": scroll_id}).encode(),
-                    )
-            finally:
-                conn.close()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f], t) for f, t in _FIELDS],
-                [f for f, _ in _FIELDS],
-            )
-
-    class EsWireTypedDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "es_wire_typed"
-
-        def schema(self) -> str:
-            return (
-                "event_id bigint, ts string, user_id bigint, "
-                "event_type string, value double"
-            )
-
-        def reader(self, schema):
-            return _EsWireTypedReader(self.options)
-
-    return EsWireTypedDataSource
+    def reader(self, schema):
+        return _EsWireTypedReader(self.options)
 
 
 def read_events_via_es_wire_typed(spark, sf_dir: str):
@@ -1941,15 +1461,8 @@ def read_events_via_es_wire_typed(spark, sf_dir: str):
     through the pushdown-capable typed DataSource."""
     addr = stage_events_in_es(spark, sf_dir)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(make_es_wire_typed_datasource())
-    return (
-        spark.read.format("es_wire_typed")
-        .option("addr", addr)
-        .option("index", ES_INDEX)
-        .option("nslices", str(ES_NSHARDS))
-        .option("pkg", _repo_root())
-        .load()
-    )
+    spark.dataSource.register(EsWireTypedDataSource)
+    return _scan_es(spark, "es_wire_typed", addr, ES_INDEX)
 
 
 def stage_events_in_es_streaming(spark, sf_dir: str) -> str:
@@ -1960,11 +1473,6 @@ def stage_events_in_es_streaming(spark, sf_dir: str) -> str:
     idempotent sinks. Indexes into a SEPARATE index so the batch and
     streaming paths stay independently auditable; returns the index
     name."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from . import es_wire as EW
     from ..streaming.runner import events_stream, run_foreach_batch
 
     addr = _es_addr(spark, sf_dir)
@@ -1972,26 +1480,15 @@ def stage_events_in_es_streaming(spark, sf_dir: str) -> str:
     key = f"{addr}/{index}"
     if key in _ES_STAGED:
         return index
-    EW.ensure_index(addr, index, ES_NSHARDS)
-    stream = events_stream(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("es_id"),
-        F.to_json(
-            F.struct(
-                F.col("event_id"),
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-                F.col("user_id"),
-                F.col("event_type"),
-                F.col("value"),
-                F.col("props"),
-            )
-        ).alias("doc"),
-    )
-    fn = bulk_index_partition_fn(addr, index, _repo_root())
+    ew.ensure_index(addr, index, ES_NSHARDS)
+    fn = bulk_index_partition_fn(addr, index)
 
     def _index_batch(batch_df, batch_id):
         batch_df.foreachPartition(fn)
 
-    run_foreach_batch(stream, _index_batch, output_mode="append")
+    run_foreach_batch(
+        _es_docs(events_stream(spark, sf_dir)), _index_batch, output_mode="append"
+    )
     _ES_STAGED.add(key)
     return index
 
@@ -2002,30 +1499,44 @@ def index_df_in_es(spark, sf_dir: str, index: str, df, id_col: str) -> str:
     the JSON of every column — the generic writer the reference's
     ``saveToEs(df)`` call is, distributed one HTTP connection per
     Spark task. Returns the server address."""
-    import json
-
     from pyspark.sql import functions as F
-
-    from . import es_wire as EW
 
     addr = _es_addr(spark, sf_dir)
     key = f"{addr}/{index}"
     if key in _ES_STAGED:
         return addr
-    EW.ensure_index(addr, index, ES_NSHARDS)
+    ew.ensure_index(addr, index, ES_NSHARDS)
     payload = df.select(
         F.col(id_col).cast("string").alias("es_id"),
         F.to_json(F.struct(*df.columns)).alias("doc"),
     )
-    payload.foreachPartition(
-        bulk_index_partition_fn(addr, index, _repo_root())
-    )
-    EW.es_request(addr, "POST", f"/{index}/_refresh")
+    payload.foreachPartition(bulk_index_partition_fn(addr, index))
+    ew.es_request(addr, "POST", f"/{index}/_refresh")
     _ES_STAGED.add(key)
     return addr
 
 
-def make_es_wire_sink_datasource():
+class _EsCommit(WriterCommitMessage):
+    def __init__(self, n: int):
+        self.n = n
+
+
+class _EsWireStreamWriter(DataSourceStreamWriter):
+    def __init__(self, options):
+        self.addr = options["addr"]
+        self.index = options["index"]
+
+    def write(self, iterator):
+        return _EsCommit(_bulk_index(self.addr, self.index, iterator))
+
+    def commit(self, messages, batchId):
+        ew.es_request(self.addr, "POST", f"/{self.index}/_refresh")
+
+    def abort(self, messages, batchId):
+        pass  # indexing by _id: a retried batch overwrites itself
+
+
+class EsWireSinkDataSource(DataSource):
     """STREAMING SINK ``format("es_wire_sink")`` — the Python
     DataSourceStreamWriter extension point (the API a real
     elasticsearch connector would implement), replacing the
@@ -2035,102 +1546,24 @@ def make_es_wire_sink_datasource():
     replayed micro-batch after failure overwrites itself — the
     idempotent exactly-once recipe at the SINK-API level); the
     driver-side ``commit(messages, batchId)`` refreshes the index once
-    the batch's tasks all succeeded. Function scope so cloudpickle
-    ships the classes BY VALUE; rows must carry (es_id string,
+    the batch's tasks all succeeded. Rows must carry (es_id string,
     doc string-JSON) columns."""
-    import json as _json
 
-    from pyspark.sql.datasource import DataSourceStreamWriter
+    @classmethod
+    def name(cls) -> str:
+        return "es_wire_sink"
 
-    class _EsCommit(WriterCommitMessage):
-        def __init__(self, n: int):
-            self.n = n
+    def schema(self) -> str:
+        return "es_id string, doc string"
 
-    class _EsWireStreamWriter(DataSourceStreamWriter):
-        def __init__(self, options):
-            self.addr = options["addr"]
-            self.index = options["index"]
-            self.pkg = options["pkg"]
-
-        def write(self, iterator):
-            import http.client
-            import sys
-
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            from real_time_big_data_analytics_spark.sources import (
-                es_wire as ew,
-            )
-
-            buf = [(r.es_id, r.doc) for r in iterator]
-            if buf:
-                host, port = self.addr.rsplit(":", 1)
-                conn = http.client.HTTPConnection(host, int(port), timeout=60)
-                try:
-                    for i in range(0, len(buf), 1000):
-                        nd = []
-                        for es_id, doc in buf[i : i + 1000]:
-                            nd.append(
-                                _json.dumps(
-                                    {
-                                        "index": {
-                                            "_index": self.index,
-                                            "_id": es_id,
-                                        }
-                                    }
-                                )
-                            )
-                            nd.append(doc)
-                        resp = ew.es_request_on(
-                            conn,
-                            "POST",
-                            "/_bulk",
-                            ("\n".join(nd) + "\n").encode("utf-8"),
-                            "application/x-ndjson",
-                        )
-                        if resp.get("errors"):
-                            raise IOError(f"bulk refused in stream sink: {resp}")
-                finally:
-                    conn.close()
-            return _EsCommit(len(buf))
-
-        def commit(self, messages, batchId):
-            import sys
-
-            if self.pkg not in sys.path:
-                sys.path.insert(0, self.pkg)
-            from real_time_big_data_analytics_spark.sources import (
-                es_wire as ew,
-            )
-
-            ew.es_request(self.addr, "POST", f"/{self.index}/_refresh")
-
-        def abort(self, messages, batchId):
-            pass  # indexing by _id: a retried batch overwrites itself
-
-    class EsWireSinkDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "es_wire_sink"
-
-        def schema(self) -> str:
-            return "es_id string, doc string"
-
-        def streamWriter(self, schema, overwrite):
-            return _EsWireStreamWriter(self.options)
-
-    return EsWireSinkDataSource
+    def streamWriter(self, schema, overwrite):
+        return _EsWireStreamWriter(self.options)
 
 
 def stage_events_via_es_sink_datasource(spark, sf_dir: str) -> str:
     """Stream the events through ``writeStream.format("es_wire_sink")``
     into its own index (staged once per fingerprint); returns the
     index name."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from . import es_wire as EW
     from ..streaming.runner import _session_tmpdir, _stream_shuffle_partitions, events_stream
 
     addr = _es_addr(spark, sf_dir)
@@ -2138,27 +1571,14 @@ def stage_events_via_es_sink_datasource(spark, sf_dir: str) -> str:
     key = f"{addr}/{index}"
     if key in _ES_STAGED:
         return index
-    EW.ensure_index(addr, index, ES_NSHARDS)
-    stream = events_stream(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("es_id"),
-        F.to_json(
-            F.struct(
-                F.col("event_id"),
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-                F.col("user_id"),
-                F.col("event_type"),
-                F.col("value"),
-                F.col("props"),
-            )
-        ).alias("doc"),
-    )
-    spark.dataSource.register(make_es_wire_sink_datasource())
+    ew.ensure_index(addr, index, ES_NSHARDS)
+    spark.dataSource.register(EsWireSinkDataSource)
     with _stream_shuffle_partitions(spark):
         query = (
-            stream.writeStream.format("es_wire_sink")
+            _es_docs(events_stream(spark, sf_dir))
+            .writeStream.format("es_wire_sink")
             .option("addr", addr)
             .option("index", index)
-            .option("pkg", _repo_root())
             .option("checkpointLocation", _session_tmpdir("rtba_ckpt_essink_"))
             .trigger(availableNow=True)
             .start()

@@ -43,6 +43,13 @@ module internalizes the one its ecosystem defaults to.
 from __future__ import annotations
 
 import struct
+import sys
+
+from pyspark import cloudpickle
+
+# Runs in Spark's Python workers, which cannot import this package:
+# pickled by value, like operators/hnsw.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 XERIAL_MAGIC = b"\x82SNAPPY\x00"
 _FRAGMENT = 1 << 16  # compress in 64 KiB fragments: offsets fit copy-2

@@ -451,8 +451,7 @@ def test_stream_checkpoint_recovery_exactly_once(spark, tmp_path, broker):
     from pyspark.sql import functions as F
 
     from real_time_big_data_analytics_spark.sources.pyds import (
-        _repo_root,
-        make_kafka_wire_stream_datasource,
+        KafkaWireStreamDataSource,
     )
 
     _, addr = broker
@@ -472,7 +471,7 @@ def test_stream_checkpoint_recovery_exactly_once(spark, tmp_path, broker):
 
     ckpt = str(tmp_path / "ckpt")
     name = f"kwrec_{uuid.uuid4().hex[:8]}"
-    spark.dataSource.register(make_kafka_wire_stream_datasource())
+    spark.dataSource.register(KafkaWireStreamDataSource)
 
     def run_once():
         s = (
@@ -480,7 +479,6 @@ def test_stream_checkpoint_recovery_exactly_once(spark, tmp_path, broker):
             .option("addr", addr)
             .option("topic", topic)
             .option("nparts", str(nparts))
-            .option("pkg", _repo_root())
             .load()
         )
         agg = s.groupBy("value").agg(F.count("*").alias("c"))

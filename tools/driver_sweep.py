@@ -6,13 +6,15 @@ oracle-backed query against DuckDB with the strict gate.
 
 This is the one harness ``tools/check.py`` cannot substitute for:
 check.py runs from the repo root, where executor workers can import
-the package, so a Python-UDF closure that references package
-module-level names (pickled BY REFERENCE by cloudpickle) still works
-there — and then dies on the driver, whose cwd is elsewhere. Running
-from a temp cwd with a vanilla session exercises the
-``_ship_package`` addPyFile path and the UTC-repin wrapper for real.
+the package, so a Python-UDF closure or Python DataSource that
+references a package module not registered for pickling by value
+still works there — and then dies on a caller's session, whose cwd is
+elsewhere. Running from a temp cwd with a vanilla session proves the
+by-value rule over the whole query surface (nothing is shipped to the
+workers) and exercises the UTC-repin wrapper for real.
 
-Usage: python tools/driver_sweep.py [--sf /root/testdata/sf0.01] [names...]
+Usage: python tools/driver_sweep.py [--sf SF_DIR] [--cpus N] [names...]
+``--cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else ``os.cpu_count()``.
 Exit code: 0 = all green, else min(failures, 255) — raw counts would
 wrap mod 256 and a 256-failure sweep would read as success (ADVICE r5).
 The true count is printed on the last line.
@@ -31,7 +33,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument(
+        "--cpus", default=os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+    )
     ap.add_argument("names", nargs="*", help="subset of queries() to replay")
     args = ap.parse_args()
 
