@@ -104,6 +104,13 @@ def _zigzag(u: int) -> int:
     return (u >> 1) ^ -(u & 1)
 
 
+def _read_byte(buf: io.BytesIO) -> int:
+    b = buf.read(1)
+    if not b:
+        raise EOFError("thrift value truncated")
+    return b[0]
+
+
 def _read_value(buf: io.BytesIO, ftype: int):
     if ftype in (_TRUE, _FALSE):
         return ftype == _TRUE
@@ -117,19 +124,19 @@ def _read_value(buf: io.BytesIO, ftype: int):
         n = _read_uvarint(buf)
         return buf.read(n)
     if ftype in (_LIST, _SET):
-        head = buf.read(1)[0]
+        head = _read_byte(buf)
         size = head >> 4
         etype = head & 0x0F
         if size == 15:
             size = _read_uvarint(buf)
         if etype in (_TRUE, _FALSE):  # bools in lists are one byte each
-            return [buf.read(1)[0] == 1 for _ in range(size)]
+            return [_read_byte(buf) == 1 for _ in range(size)]
         return [_read_value(buf, etype) for _ in range(size)]
     if ftype == _MAP:
         size = _read_uvarint(buf)
         if size == 0:
             return {}
-        kv = buf.read(1)[0]
+        kv = _read_byte(buf)
         ktype, vtype = kv >> 4, kv & 0x0F
 
         def _elem(etype):
@@ -138,7 +145,7 @@ def _read_value(buf: io.BytesIO, ftype: int):
             # encoding applies only to struct FIELDS; treating map
             # elements that way desyncs the stream for any map<_,bool>
             if etype in (_TRUE, _FALSE):
-                return buf.read(1)[0] == 1
+                return _read_byte(buf) == 1
             return _read_value(buf, etype)
 
         out = {}
